@@ -12,8 +12,10 @@ Workloads:
     classical decomposition.
 
 `python bench.py --scaling` additionally runs the transcript pipeline at
-local[8] and local[32] in subprocesses and reports scaling efficiency
-(the sandbox proxy for N vs 4N executors).
+local[4] and local[16] (BENCH_SCALING_LEVELS) in subprocesses and reports
+scaling efficiency (the single-host proxy for N vs 4N executors);
+BENCH_SCALING_MODE=executors runs each leg as a local-cluster of separate
+4-core executor JVMs instead (1x4 vs 4x4).
 """
 
 from __future__ import annotations

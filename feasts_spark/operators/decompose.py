@@ -11,8 +11,8 @@ implementations exist:
     the scale path), and
   - classical kernel inside the UDF tests as the oracle-exact cross-check.
 
-fitted/residuals (stl.R:132-140) are trivial column arithmetic on the
-output and provided as helpers.
+fitted/residuals (stl.R:132-140) are plain column arithmetic on the
+output (value - remainder, remainder), left to the caller.
 """
 
 from __future__ import annotations
@@ -85,16 +85,6 @@ def reconstruction_ok(total_col: str, part_cols: list[str], tol: float = 1e-9):
     for p in part_cols:
         resid = resid - F.col(p)
     return F.abs(resid) < tol
-
-
-def stl_fitted(components: DataFrame, value_col: str = "val_avg") -> DataFrame:
-    """fitted() = value - remainder (stl.R:132-134)."""
-    return components.withColumn("fitted", F.col(value_col) - F.col("remainder"))
-
-
-def stl_residuals(components: DataFrame) -> DataFrame:
-    """residuals() = remainder (stl.R:138-140)."""
-    return components.withColumn("residuals", F.col("remainder"))
 
 
 def classical_decomposition(

@@ -81,7 +81,15 @@ def doc_stream_offsets(
     never change a single offset: re-running on a repartitioned corpus
     packs identically, the property that makes a training run
     reproducible. Raise n_chunks with the corpus (10^9 docs / 4096
-    chunks ≈ 250k-row sorted windows)."""
+    chunks ≈ 250k-row sorted windows).
+
+    Executor loss: with n_chunks > 1 the range-chunked frame is pinned
+    with localCheckpoint so both branches share one range-boundary
+    decision. The pin keeps its blocks only on the executors that
+    computed them and drops their lineage. Losing such an executor makes
+    a later read of its blocks fail with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+    on every retry, so the action fails: it is not recomputed from
+    lineage and no wrong offset is returned. Rerun the query."""
     if budget_tokens <= 0:
         raise ValueError("budget_tokens must be positive")
     n_tok = F.size(_tokens(text_col)).cast("long")

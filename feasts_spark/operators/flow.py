@@ -212,9 +212,8 @@ def conv_flow_sketch(
     10^12 turns over ~14 edges the state is ~10^11 map entries in a
     single JVM — an executor OOM. This variant replaces the percentile
     UDAF with the engine's mergeable fixed-grid latency histogram
-    (operators.sketch binning — the SAME grid format the streaming twin
-    in streaming/flow_stream.py emits), so every aggregation operator in
-    the plan carries O(|edges| * n_bins) state regardless of corpus size.
+    (operators.sketch binning), so every aggregation operator in the plan
+    carries O(|edges| * n_bins) state regardless of corpus size.
 
     n / n_convs / share / mean_s are EXACT and equal the exact pack
     bit-for-bit (sums and a two-phase distinct count); p50/p90/p99 are

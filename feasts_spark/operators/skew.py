@@ -68,7 +68,15 @@ def salted_rollup(
     sized, ~60:1 smaller than raw) so both branches read one
     materialization, same pattern as doc_stream_offsets' chunk-boundary
     pin. Set False where a pure Catalyst plan is required (plan-shape
-    introspection, streaming twins build their own pipeline anyway).
+    introspection).
+
+    Executor loss: the pinned partials live only in the block managers of
+    the executors that computed them, and Spark drops their lineage once
+    they are materialized. If such an executor is lost, a later task that
+    reads one of its blocks fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
+    every retry fails the same way, and the action fails: the job stops,
+    it is neither recomputed from lineage nor answered wrongly. Rerun it
+    (jobs/rollup_job.py --resume redoes only the unfinished day units).
     """
     if heavy_keys is None:
         heavy_keys = detect_heavy_keys(df, key_col, threshold=heavy_threshold)
@@ -132,30 +140,3 @@ def salted_rollup(
         "val_avg", F.col("val_sum") / F.col("n_points")
     )
 
-
-def split_long_groups(
-    df: DataFrame,
-    key_col: str,
-    order_col: str,
-    max_rows: int = 250_000,
-    dense_index: bool = True,
-) -> DataFrame:
-    """Add a `_chunk` column splitting giant groups into bounded sub-groups.
-
-    Used before applyInPandas so a single 200k-turn conversation cannot blow
-    an executor's Arrow batch; per-chunk results are merged downstream
-    (valid for chunkable ops: rollup partials, Gorilla chunks).
-
-    With a dense integer order column (turn_idx) the chunk is a pure
-    projection — no shuffle. The window fallback (dense_index=False) routes
-    the whole group through one task and is only acceptable for moderate
-    skew; prefer carrying a dense index at scale.
-    """
-    if dense_index:
-        return df.withColumn(
-            "_chunk", (F.col(order_col).cast("long") / max_rows).cast("long")
-        )
-    from pyspark.sql import Window as W
-
-    rn = F.row_number().over(W.partitionBy(key_col).orderBy(order_col))
-    return df.withColumn("_chunk", ((rn - 1) / max_rows).cast("long"))

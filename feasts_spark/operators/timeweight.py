@@ -92,9 +92,8 @@ def time_weighted_partials(df: DataFrame, tier: str,
     tier-algebra form — partials re-aggregate to any coarser tier by
     plain SUM (a 1h bucket's sums are exactly its 60 1m buckets' sums,
     because bucket splitting at the fine tier subdivides the same
-    segments), the same cascade property the rollup tiers exploit; it
-    is also what the streaming twin emits. `finalize_time_weighted`
-    turns partials into means."""
+    segments), the same cascade property the rollup tiers exploit.
+    `finalize_time_weighted` turns partials into means."""
     seg = _segments(df, key_col, ts_col, {value_col: "v"}, tie_col)
     bk = _bucketed(seg, tier)
     # linear interpolant value at the clip points a/b
@@ -136,10 +135,10 @@ def finalize_time_weighted(partials: DataFrame) -> DataFrame:
 
     Sums per (series, bucket) FIRST, so the one finalizer serves both
     shapes a caller can hold: the batch partials frame (already unique
-    per bucket) and any UNION of streamed / snapshot-sinked micro-batch
-    emissions, where a bucket legitimately appears once per emission.
-    Finalizing accumulated emissions without the sum would silently
-    yield one partial-only mean per emission — hence no raw-divide
+    per bucket) and any UNION of partial frames (e.g. per-batch
+    appends to a snapshot table), where a bucket legitimately appears
+    once per frame. Finalizing such a union without the sum would
+    silently yield one partial-only mean per frame — hence no raw-divide
     variant is exported (`time_weighted` composes the private
     projection directly, skipping the redundant re-aggregation on the
     hot batch path)."""

@@ -43,22 +43,6 @@ def topk_by_group(
     counts = df.groupBy(*group_cols, item_col).agg(
         F.count(F.lit(1)).alias(count_col)
     )
-    return rank_topk(counts, k, group_cols, item_col, count_col, rank_col)
-
-
-def rank_topk(
-    counts: DataFrame,
-    k: int,
-    group_cols: list[str],
-    item_col: str,
-    count_col: str = "cnt",
-    rank_col: str = "rnk",
-) -> DataFrame:
-    """Rank pre-aggregated (group, item, count) rows to top-k per group —
-    deterministic (count DESC, item ASC) order. Shared by the batch
-    operator above and the streaming finalize step
-    (streaming.agg_stream.finalize_topk) so the tie contract cannot
-    drift between the two."""
     w = Window.partitionBy(*group_cols).orderBy(
         F.col(count_col).desc(), F.col(item_col).asc()
     )

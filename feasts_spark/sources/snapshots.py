@@ -13,9 +13,10 @@ an atomic pointer, not its code):
   harvested from the parquet FOOTER at commit time (pyarrow metadata read —
   no data pages touched).
 - **Atomic commits, optimistic concurrency.** Committing version N creates
-  ``metadata/v{N}.json`` with O_EXCL — the exclusive create IS the commit
-  point (the same linearization Iceberg gets from a conditional pointer
-  swap; on an object store this maps to a conditional PUT). Two writers
+  ``metadata/v{N}.json`` exclusively (O_EXCL semantics, as a hard link of
+  the fully written file) — the exclusive create IS the commit point (the
+  same linearization Iceberg gets from a conditional pointer swap; on an
+  object store this maps to a conditional PUT). Two writers
   racing from the same parent deterministically leave one winner; the loser
   gets :class:`SnapshotConflict`, cleans up its staging files, and retries
   against the new head.
@@ -743,16 +744,24 @@ class SnapshotTable:
             **era,
         }
         path = self._manifest_path(new_v)
+        # Write the manifest in full to a tmp file, then publish it with an
+        # exclusive hard link. The link is the commit point (first writer
+        # of v{N} wins), and v{N}.json never exists half-written: a reader
+        # racing the commit, or a writer dying mid-write, cannot make an
+        # empty or torn manifest the table head.
+        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
         try:
-            # O_EXCL create is the commit point: first writer of v{N} wins.
-            fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
+            with open(tmp, "w") as f:
+                json.dump(manifest, f)
+            os.link(tmp, path)
         except FileExistsError as e:
             raise SnapshotConflict(
                 f"version {new_v} already committed by another writer; "
                 "re-read the table head and retry"
             ) from e
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
         return new_v
 
     def _check_schema(self, df: DataFrame, parent: dict) -> str:
@@ -1774,12 +1783,14 @@ class SnapshotTable:
             if now - os.path.getmtime(p) >= orphan_grace_s:
                 os.remove(p)
                 removed_staged += 1
-        # tag tmp files leak only if tag() crashed mid-publish; sweep
-        # them with the same grace window (an in-flight tag() holds its
-        # tmp for microseconds). Real tags end in ".json"; tmps carry a
-        # hex suffix AFTER it — the endswith guard keeps a tag whose
-        # NAME legally contains ".json.tmp-" out of the sweep.
-        for p in glob.glob(os.path.join(self.meta_dir, "tag-*.json.tmp-*")):
+        # tag and manifest tmp files leak only if tag() or a commit
+        # crashed mid-publish; sweep them with the same grace window (an
+        # in-flight publish holds its tmp for microseconds). Real tags end
+        # in ".json"; tmps carry a hex suffix AFTER it — the endswith
+        # guard keeps a tag whose NAME legally contains ".json.tmp-" out
+        # of the sweep.
+        for p in (glob.glob(os.path.join(self.meta_dir, "tag-*.json.tmp-*"))
+                  + glob.glob(os.path.join(self.meta_dir, "v*.json.tmp-*"))):
             if p.endswith(".json"):
                 continue
             if now - os.path.getmtime(p) >= orphan_grace_s:

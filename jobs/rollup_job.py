@@ -209,7 +209,15 @@ def main() -> None:
         and the merge always reads the snapshot: any retry reproduces the
         same bytes. The snapshot also truncates the lineage the coarser
         tiers re-read, so overwriting the live partition cannot leak into
-        the cascade (read-your-own-write)."""
+        the cascade (read-your-own-write).
+
+        The refreshed day is pinned with an eager localCheckpoint for the
+        2-3 tier writes. The pin does not survive the loss of an executor
+        that holds its blocks: the next write that reads them fails with
+        CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on every retry, and the unit
+        raises before its manifest row is recorded. That is the state a
+        crash mid-unit leaves: --resume redoes the unit from the same
+        pre-refresh snapshot. Nothing is recomputed from lineage."""
         from feasts_spark.operators.rollup import rollup_refresh
 
         late_sub = late_series.filter(F.to_date("ts") == day)

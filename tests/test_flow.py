@@ -199,9 +199,8 @@ class TestConvFlowSketch:
 
     def test_percentiles_within_one_bin_of_order_stat(self, spark):
         """The sketch targets the ceil(q*n) order statistic (the
-        documented contract, same as the streaming twin) to one bin
-        width — NOT Spark's interpolated percentile, whose gap to any
-        order statistic is unbounded."""
+        documented contract) to one bin width — NOT Spark's interpolated
+        percentile, whose gap to any order statistic is unbounded."""
         import math
 
         corpus, exact, sk = self._pair(spark)

@@ -76,6 +76,32 @@ class TestConflict:
         # loser's rows never became visible
         assert table.read().count() == 15
 
+    def test_crash_mid_manifest_write_keeps_head(self, spark, table,
+                                                 monkeypatch):
+        """A writer dying while it writes v{N}.json must not publish a torn
+        manifest: readers keep seeing v{N-1} (as does a reader racing a
+        live commit), and the next commit takes v{N}."""
+        import json
+
+        table.append(_mk(spark, 10))
+        parent = table.manifest()
+        _, files = table._stage_files(_mk(spark, 5, offset=100), True)
+        schema = _mk(spark, 1).schema.json()
+
+        def torn_dump(obj, f):
+            f.write('{"version": ')
+            raise OSError("writer died mid-write")
+
+        with monkeypatch.context() as m:
+            m.setattr(json, "dump", torn_dump)
+            with pytest.raises(OSError, match="mid-write"):
+                table._commit(parent["files"] + files, "append", parent,
+                              schema, {})
+        assert table.current_version() == 1
+        assert table.read().count() == 10
+        assert table.append(_mk(spark, 5, offset=200)) == 2
+        assert table.read().count() == 15
+
 
 class TestPruning:
     def test_read_where_skips_files_by_stats(self, spark, table):

@@ -2,7 +2,6 @@
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from feasts_spark.operators.rollup import rollup_raw
 from feasts_spark.streaming.rollup_stream import run_stream_once
@@ -29,70 +28,6 @@ def test_stream_rollup_matches_batch(spark, sf_dir):
              "val_first", "val_last", "first_ts", "last_ts"]
     pd.testing.assert_frame_equal(got[exact], batch[exact], check_exact=True)
     np.testing.assert_allclose(got["val_sum"], batch["val_sum"], rtol=1e-12)
-
-
-def test_stream_gapfill_locf_matches_batch(spark, tmp_path):
-    """Stateful streaming LOCF over 2 micro-batches == batch gap-fill.
-
-    The time-split forces the interesting path: gaps SPANNING the
-    micro-batch boundary must be filled from carried state."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from feasts_spark.operators.gapfill import gapfill_locf
-    from feasts_spark.streaming.gapfill_stream import stream_gapfill_locf
-
-    rng = np.random.default_rng(11)
-    rows = []
-    base = pd.Timestamp("2024-03-01", tz=None)
-    for key in ("a", "b", "c"):
-        # sparse hourly buckets over 8 days with multi-bucket gaps
-        hours = np.sort(rng.choice(np.arange(0, 192), size=40, replace=False))
-        for h in hours:
-            rows.append((key, base + pd.Timedelta(hours=int(h)),
-                         float(rng.normal(100, 10))))
-    pdf = pd.DataFrame(rows, columns=["series_key", "bucket_ts", "val_avg"])
-    pdf["bucket_ts"] = pdf["bucket_ts"].astype("datetime64[us]")
-    cut = base + pd.Timedelta(hours=96)
-    d = tmp_path / "stream_in"
-    d.mkdir()
-    pdf[pdf["bucket_ts"] < cut].to_parquet(d / "batch0.parquet", index=False)
-    pdf[pdf["bucket_ts"] >= cut].to_parquet(d / "batch1.parquet", index=False)
-
-    stream = (
-        spark.readStream.schema(
-            "series_key string, bucket_ts timestamp, val_avg double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_gapfill_locf(stream, "1h")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_gapfill_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.sql("SELECT * FROM t_gapfill_stream")
-        .orderBy("series_key", "bucket_ts")
-        .toPandas()
-    )
-    batch = (
-        gapfill_locf(spark.createDataFrame(pdf), "1h", value_cols=("val_avg",))
-        .select(
-            "series_key", "bucket_ts",
-            F.col("val_avg_filled").alias("value"), "is_gap",
-        )
-        .orderBy("series_key", "bucket_ts")
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(
-        got.reset_index(drop=True), batch.reset_index(drop=True),
-        check_exact=True,
-    )
 
 
 def test_stream_rollup_late_data_within_watermark(spark, tmp_path):
@@ -145,561 +80,3 @@ def test_stream_rollup_late_data_within_watermark(spark, tmp_path):
     assert h0["val_sum"] == 11.0
     assert h0["val_first"] == 1.0 and h0["val_last"] == 10.0
     assert list(got["n_points"]) == [2, 1, 1, 1]
-
-
-def test_stream_dedup_stateful_matches_batch(spark, tmp_path):
-    """Stateful streaming exact dedup over 2 micro-batches: final per-hash
-    counts equal the batch exact_dedup, duplicates spanning the batch
-    boundary are detected from carried state."""
-    from feasts_spark.operators.dedup import exact_dedup
-    from feasts_spark.streaming.dedup_stream import stream_dedup_stateful
-
-    rows = [
-        (0, "alpha"), (1, "beta"), (2, "alpha"),          # batch 0
-        (3, "gamma"), (4, "alpha"), (5, "beta"), (6, "delta"),  # batch 1
-    ]
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-    d = tmp_path / "dedup_in"
-    d.mkdir()
-    pdf.iloc[:3].to_parquet(d / "b0.parquet", index=False)
-    pdf.iloc[3:].to_parquet(d / "b1.parquet", index=False)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_dedup_stateful(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_dedup_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM t_dedup_stream").toPandas()
-    # last emission per hash carries the final running count
-    final = (
-        got.sort_values("n_dups").groupby("text_hash").last().reset_index()
-    )
-    batch = exact_dedup(spark.createDataFrame(pdf)).toPandas()
-    merged = final.merge(batch, on="text_hash", suffixes=("_s", "_b"))
-    assert len(merged) == len(batch) == 4
-    assert (merged["n_dups_s"] == merged["n_dups_b"]).all()
-    # first-seen id wins in the stream; with ordered ids that's min id too
-    assert (merged["rep_id_s"] == merged["rep_id_b"]).all()
-    # the cross-boundary duplicate (doc 4, "alpha") produced a non-first
-    # update row with the original representative
-    alpha = got[got["rep_id"] == 0].sort_values("n_dups")
-    assert list(alpha["n_dups"]) == [2, 3]
-    assert list(alpha["is_first"]) == [True, False]
-
-
-def test_stream_dedup_watermark_drops_dupes(spark, tmp_path):
-    from feasts_spark.streaming.dedup_stream import stream_dedup_exact
-
-    base = pd.Timestamp("2024-05-01")
-    pdf = pd.DataFrame({
-        "doc_id": [0, 1, 2, 3],
-        "text": ["x", "x", "y", "x"],
-        "ts": [base, base + pd.Timedelta(minutes=1),
-               base + pd.Timedelta(minutes=2), base + pd.Timedelta(minutes=3)],
-    })
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    d = tmp_path / "dedup_wm"
-    d.mkdir()
-    pdf.to_parquet(d / "b0.parquet", index=False)
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .parquet(str(d))
-    )
-    q = (
-        stream_dedup_exact(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_dedup_wm")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM t_dedup_wm").toPandas()
-    assert sorted(got["text"]) == ["x", "y"]  # within-watermark dupes dropped
-
-
-def test_stream_dedup_stateful_multipartition_batch(spark, tmp_path):
-    """Duplicates of one hash split across two files of the SAME
-    micro-batch: the representative must be the deterministic min id."""
-    from feasts_spark.streaming.dedup_stream import stream_dedup_stateful
-
-    d = tmp_path / "dedup_mp"
-    d.mkdir()
-    pd.DataFrame({"doc_id": [7], "text": ["alpha"]}).to_parquet(
-        d / "a.parquet", index=False
-    )
-    pd.DataFrame({"doc_id": [3], "text": ["alpha"]}).to_parquet(
-        d / "b.parquet", index=False
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string").parquet(str(d))
-    )
-    q = (
-        stream_dedup_stateful(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_dedup_mp")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM t_dedup_mp").toPandas()
-    final = got.sort_values("n_dups").iloc[-1]
-    assert final["rep_id"] == 3 and final["n_dups"] == 2
-
-
-def test_stream_sessionize_matches_batch(spark, tmp_path):
-    """Streaming gap-sessionization: closed sessions match the batch
-    operator; a session spanning the micro-batch boundary is continued
-    from state; open sessions emit once the watermark passes their gap."""
-    from feasts_spark.operators.sessionize import session_stats
-    from feasts_spark.streaming.sessionize_stream import stream_sessionize
-
-    base = pd.Timestamp("2024-05-01 00:00:00")
-    mins = lambda m: base + pd.Timedelta(minutes=m)  # noqa: E731
-    # key 1: session 0 = {0,1,2}m; session 1 = {120,121}m ... continued by
-    # batch 1's 150m row (gap 29m < 60m); closed by the watermark advance
-    b0 = pd.DataFrame({
-        "user_id": [1] * 5,
-        "ts": [mins(m) for m in (0, 1, 2, 120, 121)],
-        "value": [1.0, 2.0, 3.0, 4.0, 5.0],
-    })
-    # key 2 far in the future advances the watermark past key 1's close
-    b1 = pd.DataFrame({
-        "user_id": [1, 2],
-        "ts": [mins(150), mins(5000)],
-        "value": [6.0, 7.0],
-    })
-    d = tmp_path / "sess_in"
-    d.mkdir()
-    for i, b in enumerate((b0, b1)):
-        b.assign(ts=b["ts"].astype("datetime64[us]")).to_parquet(
-            d / f"b{i}.parquet", index=False
-        )
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_sessionize(stream, gap_seconds=3600, watermark="10 minutes")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_sess_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.sql("SELECT * FROM t_sess_stream")
-        .orderBy("series_key", "session_id")
-        .toPandas()
-    )
-    # key 1's both sessions closed (second by watermark timeout); key 2's
-    # single session is still open -> not emitted
-    assert list(got["series_key"]) == [1, 1]
-    full = pd.concat([b0, b1[b1.user_id == 1]], ignore_index=True)
-    batch = (
-        session_stats(
-            spark.createDataFrame(full), gap_seconds=3600,
-            key_col="user_id", ts_col="ts", value_col="value",
-        )
-        .orderBy("series_key", "session_id")
-        .toPandas()
-    )
-    for col in ("session_id", "n_events", "session_start", "session_end",
-                "duration_s", "val_sum"):
-        assert list(got[col]) == list(batch[col]), col
-
-
-def test_stream_sessionize_closes_carried_session_on_gap(spark, tmp_path):
-    """A key whose FIRST event in a new micro-batch exceeds the gap must
-    close the carried open session (emit it, advance session_id) rather
-    than silently dropping it and reusing its id (round-3 regression)."""
-    from feasts_spark.operators.sessionize import session_stats
-    from feasts_spark.streaming.sessionize_stream import stream_sessionize
-
-    base = pd.Timestamp("2024-05-01 00:00:00")
-    mins = lambda m: base + pd.Timedelta(minutes=m)  # noqa: E731
-    b0 = pd.DataFrame({
-        "user_id": [1] * 3,
-        "ts": [mins(m) for m in (0, 1, 2)],
-        "value": [1.0, 2.0, 3.0],
-    })
-    # batch 1: key 1 jumps 118m (> 60m gap) -> carried session closes;
-    # key 2 far ahead advances the watermark so the new session times out
-    b1 = pd.DataFrame({
-        "user_id": [1, 2],
-        "ts": [mins(120), mins(5000)],
-        "value": [4.0, 5.0],
-    })
-    d = tmp_path / "sess_gap_in"
-    d.mkdir()
-    for i, b in enumerate((b0, b1)):
-        b.assign(ts=b["ts"].astype("datetime64[us]")).to_parquet(
-            d / f"b{i}.parquet", index=False
-        )
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_sessionize(stream, gap_seconds=3600, watermark="10 minutes")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_sess_gapclose")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.sql("SELECT * FROM t_sess_gapclose WHERE series_key = 1")
-        .orderBy("session_id")
-        .toPandas()
-    )
-    full = pd.concat([b0, b1[b1.user_id == 1]], ignore_index=True)
-    batch = (
-        session_stats(
-            spark.createDataFrame(full), gap_seconds=3600,
-            key_col="user_id", ts_col="ts", value_col="value",
-        )
-        .orderBy("session_id")
-        .toPandas()
-    )
-    assert len(got) == 2  # both sessions emitted, ids 0 and 1
-    for col in ("session_id", "n_events", "session_start", "session_end",
-                "duration_s", "val_sum"):
-        assert list(got[col]) == list(batch[col]), col
-
-
-def test_stream_sessionize_id_continues_after_timeout_close(spark, tmp_path):
-    """A session closed by the event-time TIMEOUT must leave the key's id
-    counter behind (counter-only state record): a later burst for the key
-    continues the 0-based sequence instead of restarting at session_id 0
-    and colliding with the already-emitted row (round-3 review finding)."""
-    from feasts_spark.operators.sessionize import session_stats
-    from feasts_spark.streaming.sessionize_stream import stream_sessionize
-
-    base = pd.Timestamp("2024-05-01 00:00:00")
-    mins = lambda m: base + pd.Timedelta(minutes=m)  # noqa: E731
-    batches = [
-        # b0: key 1 session 0
-        pd.DataFrame({"user_id": [1, 1, 1],
-                      "ts": [mins(m) for m in (0, 1, 2)],
-                      "value": [1.0, 2.0, 3.0]}),
-        # b1: key 2 advances the watermark past key 1's close
-        pd.DataFrame({"user_id": [2], "ts": [mins(5000)], "value": [9.0]}),
-        # b2: key 2 again -> key 1 has NO data this batch, so its open
-        # session closes via the timeout path (the buggy path)
-        pd.DataFrame({"user_id": [2], "ts": [mins(5010)], "value": [9.0]}),
-        # b3: key 1 returns -> must continue at session_id 1
-        pd.DataFrame({"user_id": [1, 1],
-                      "ts": [mins(6000), mins(6001)],
-                      "value": [4.0, 5.0]}),
-        # b4: watermark passes key 1's second close
-        pd.DataFrame({"user_id": [2], "ts": [mins(20000)], "value": [9.0]}),
-    ]
-    d = tmp_path / "sess_timeout_in"
-    d.mkdir()
-    for i, b in enumerate(batches):
-        b.assign(ts=b["ts"].astype("datetime64[us]")).to_parquet(
-            d / f"b{i}.parquet", index=False
-        )
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_sessionize(stream, gap_seconds=3600, watermark="10 minutes")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_sess_timeout_ids")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.sql("SELECT * FROM t_sess_timeout_ids WHERE series_key = 1")
-        .orderBy("session_id")
-        .toPandas()
-    )
-    key1 = pd.concat([b[b.user_id == 1] for b in batches], ignore_index=True)
-    batch = (
-        session_stats(
-            spark.createDataFrame(key1), gap_seconds=3600,
-            key_col="user_id", ts_col="ts", value_col="value",
-        )
-        .orderBy("session_id")
-        .toPandas()
-    )
-    assert list(got["session_id"]) == [0, 1]
-    for col in ("session_id", "n_events", "session_start", "session_end",
-                "duration_s", "val_sum"):
-        assert list(got[col]) == list(batch[col]), col
-
-
-class TestStreamFeatures:
-    @staticmethod
-    def _write_batches(tmp_path, batches, name):
-        d = tmp_path / name
-        d.mkdir()
-        for i, b in enumerate(batches):
-            b.assign(
-                bucket_ts=b["bucket_ts"].astype("datetime64[us]")
-            ).to_parquet(d / f"b{i}.parquet", index=False)
-        return d
-
-    @staticmethod
-    def _run(spark, d, qname, **kw):
-        from feasts_spark.streaming.features_stream import stream_features
-
-        stream = (
-            spark.readStream.schema(
-                "series_key long, bucket_ts timestamp, val_avg double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(d))
-        )
-        q = (
-            stream_features(stream, **kw)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.sql(f"SELECT * FROM {qname}")
-
-    def test_snapshot_equals_batch_kernel(self, spark, tmp_path):
-        """The LAST snapshot per key must equal compute_feature_pack on
-        the trailing window of the merged corpus — same kernel, so this
-        pins the state merge / ordering / truncation logic."""
-        import numpy as np
-
-        from feasts_spark.operators.features import compute_feature_pack
-
-        base = pd.Timestamp("2024-03-01")
-        rng = np.random.default_rng(3)
-        v1 = rng.normal(10, 2, size=90)
-        v2 = np.sin(np.arange(80) * 2 * np.pi / 24) * 5 + 20
-        rows1 = pd.DataFrame({
-            "series_key": 1,
-            "bucket_ts": [base + pd.Timedelta(hours=h) for h in range(90)],
-            "val_avg": v1,
-        })
-        rows2 = pd.DataFrame({
-            "series_key": 2,
-            "bucket_ts": [base + pd.Timedelta(hours=h) for h in range(80)],
-            "val_avg": v2,
-        })
-        both = pd.concat([rows1, rows2], ignore_index=True)
-        # 3 micro-batches split by time, keys interleaved
-        batches = [
-            both[both.bucket_ts < base + pd.Timedelta(hours=30)],
-            both[(both.bucket_ts >= base + pd.Timedelta(hours=30))
-                 & (both.bucket_ts < base + pd.Timedelta(hours=60))],
-            both[both.bucket_ts >= base + pd.Timedelta(hours=60)],
-        ]
-        d = self._write_batches(tmp_path, batches, "feat_stream_in")
-        out = self._run(
-            spark, d, "t_feat_stream", period=24, window_points=64,
-            min_points=12,
-        ).toPandas()
-        assert set(out["series_key"]) == {1, 2}
-        for key, vals in ((1, v1), (2, v2)):
-            snaps = out[out.series_key == key].sort_values("window_end")
-            last = snaps.iloc[-1]
-            assert last["n_points"] == 64  # truncated to the window
-            expect = compute_feature_pack(vals[-64:], period=24)
-            for c, e in expect.items():
-                got = float(last[c])
-                if np.isnan(e):
-                    assert np.isnan(got), c
-                else:
-                    assert got == pytest.approx(e, rel=1e-12, abs=1e-12), c
-            # one snapshot per micro-batch that carried data for the key
-            assert len(snaps) == 3
-
-    def test_redelivered_point_replaces_and_min_points(self, spark, tmp_path):
-        from feasts_spark.operators.features import compute_feature_pack
-
-        base = pd.Timestamp("2024-03-01")
-        b0 = pd.DataFrame({
-            "series_key": [1] * 20 + [7] * 3,   # key 7 stays under min_points
-            "bucket_ts": [base + pd.Timedelta(hours=h) for h in range(20)]
-            + [base + pd.Timedelta(hours=h) for h in range(3)],
-            "val_avg": [float(h) for h in range(20)] + [1.0, 2.0, 3.0],
-        })
-        # re-deliver hour 5 with a corrected value AND advance the window
-        # by one point, so the two snapshots have distinct window_end and
-        # "latest" is well-defined
-        b1 = pd.DataFrame({
-            "series_key": [1, 1],
-            "bucket_ts": [base + pd.Timedelta(hours=5),
-                          base + pd.Timedelta(hours=20)],
-            "val_avg": [99.0, 20.0],
-        })
-        d = self._write_batches(tmp_path, [b0, b1], "feat_redeliver_in")
-        sel = ("n_crossing_points", "longest_flat_spot", "feat_acf")
-        out = self._run(
-            spark, d, "t_feat_redeliver", period=1, window_points=32,
-            min_points=10, select=sel,
-        ).toPandas()
-        assert set(out["series_key"]) == {1}  # key 7 never reaches min
-        last = out.sort_values("window_end").iloc[-1]
-        assert last["window_end"] == base + pd.Timedelta(hours=20)
-        vals = np.array([float(h) for h in range(21)])
-        vals[5] = 99.0
-        expect = compute_feature_pack(vals, period=1, select=sel)
-        for c, e in expect.items():
-            assert float(last[c]) == pytest.approx(e, nan_ok=True), c
-        assert last["n_points"] == 21
-
-    def test_validation(self, spark):
-        from feasts_spark.streaming.features_stream import stream_features
-
-        with pytest.raises(ValueError, match="window_points"):
-            stream_features(spark.range(1), window_points=1, min_points=5)
-
-    def test_string_keys_stay_distinct_series(self, spark, tmp_path):
-        """ADVICE r03: a string key column (conv ids) must come through
-        as distinct series with its native type — not silently cast to
-        NULL long and merged into one group."""
-        import numpy as np
-
-        from feasts_spark.operators.features import compute_feature_pack
-        from feasts_spark.streaming.features_stream import stream_features
-
-        base = pd.Timestamp("2024-03-01")
-        rows = pd.concat(
-            [
-                pd.DataFrame({
-                    "series_key": key,
-                    "bucket_ts": [
-                        base + pd.Timedelta(hours=h) for h in range(40)
-                    ],
-                    "val_avg": vals,
-                })
-                for key, vals in (
-                    ("conv-a", np.arange(40, dtype="float64")),
-                    ("conv-b", np.sin(np.arange(40) / 3.0) * 4 + 7),
-                )
-            ],
-            ignore_index=True,
-        )
-        d = tmp_path / "feat_stream_str"
-        d.mkdir()
-        rows.assign(
-            bucket_ts=rows["bucket_ts"].astype("datetime64[us]")
-        ).to_parquet(d / "b0.parquet", index=False)
-        stream = (
-            spark.readStream.schema(
-                "series_key string, bucket_ts timestamp, val_avg double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(d))
-        )
-        q = (
-            stream_features(
-                stream, period=12, window_points=64, min_points=12,
-                select=("n_crossing_points", "longest_flat_spot"),
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("t_feat_stream_strkey")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.sql("SELECT * FROM t_feat_stream_strkey").toPandas()
-        assert dict(out.dtypes)["series_key"] == object
-        assert set(out["series_key"]) == {"conv-a", "conv-b"}
-        for key, vals in (
-            ("conv-a", np.arange(40, dtype="float64")),
-            ("conv-b", np.sin(np.arange(40) / 3.0) * 4 + 7),
-        ):
-            snap = out[out.series_key == key].iloc[-1]
-            expect = compute_feature_pack(
-                vals, period=12,
-                select=("n_crossing_points", "longest_flat_spot"),
-            )
-            for c, e in expect.items():
-                assert float(snap[c]) == pytest.approx(e, nan_ok=True), c
-
-
-def test_stream_sessionize_late_event_does_not_regress_session_end(
-    spark, tmp_path
-):
-    """An in-watermark LATE event inside the open session must merge via
-    min/max-clamped bounds: the session end stays at the true max ts and
-    the close timer is not re-armed early (round-3 review finding: the
-    batch segment's last_ts overwrote the carried later end)."""
-    from feasts_spark.operators.sessionize import session_stats
-    from feasts_spark.streaming.sessionize_stream import stream_sessionize
-
-    base = pd.Timestamp("2024-05-01 00:00:00")
-    mins = lambda m: base + pd.Timedelta(minutes=m)  # noqa: E731
-    batches = [
-        pd.DataFrame({"user_id": [1, 1, 1],
-                      "ts": [mins(0), mins(1), mins(2)],
-                      "value": [1.0, 2.0, 3.0]}),
-        # a LATE event at 1.5m (watermark is still pre-epoch) plus a
-        # watermark advancer on key 2
-        pd.DataFrame({"user_id": [1, 2],
-                      "ts": [mins(1.5), mins(5000)],
-                      "value": [9.0, 0.0]}),
-        # advance watermark past key 1's close
-        pd.DataFrame({"user_id": [2], "ts": [mins(5020)], "value": [0.0]}),
-    ]
-    d = tmp_path / "sess_late_in"
-    d.mkdir()
-    for i, b in enumerate(batches):
-        b.assign(ts=b["ts"].astype("datetime64[us]")).to_parquet(
-            d / f"b{i}.parquet", index=False
-        )
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_sessionize(stream, gap_seconds=3600, watermark="10 minutes")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_sess_late")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.sql("SELECT * FROM t_sess_late WHERE series_key = 1")
-        .orderBy("session_id")
-        .toPandas()
-    )
-    key1 = pd.concat(
-        [b[b.user_id == 1] for b in batches], ignore_index=True
-    )
-    batch = (
-        session_stats(
-            spark.createDataFrame(key1), gap_seconds=3600,
-            key_col="user_id", ts_col="ts", value_col="value",
-        )
-        .orderBy("session_id")
-        .toPandas()
-    )
-    assert len(got) == 1
-    for col in ("session_id", "n_events", "session_start", "session_end",
-                "duration_s", "val_sum"):
-        assert list(got[col]) == list(batch[col]), col

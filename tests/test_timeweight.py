@@ -146,3 +146,35 @@ class TestPartialsCascade:
             assert a.covered_us == b.covered_us
             assert a.twa_locf == pytest.approx(b.twa_locf, rel=1e-12)
             assert a.twa_linear == pytest.approx(b.twa_linear, rel=1e-12)
+
+
+class TestTranscriptRoleOccupancy:
+    def test_role_occupancy_over_synthesized_transcripts(self, spark):
+        """The north-rule input shape end-to-end: wall-clock per role per
+        conversation-hour over synthesized transcripts, via the generic
+        state-occupancy operator."""
+        from feasts_spark.sources.transcripts import synthesize_transcripts
+
+        # cached: each action would otherwise regenerate the corpus
+        # (~300k turns, three 100k-turn whales) in Python workers
+        tr = synthesize_transcripts(spark, n_convs=30, max_turns=3000).cache()
+        assert {"conv_id", "turn_idx", "role", "text", "tool", "ts"} \
+            <= set(tr.columns)
+        occ = duration_in_state(tr, "1h", key_col="conv_id",
+                                ts_col="ts", state_col="role",
+                                tie_col="turn_idx")
+        tot = occ.agg(F.sum("state_us")).collect()[0][0]
+        assert tot and tot > 0
+        top = state_top(tr, "1h", key_col="conv_id", ts_col="ts",
+                        state_col="role", tie_col="turn_idx")
+        r = top.first()
+        assert r.state_top in ("user", "assistant", "system", "tool")
+        # occupancy partitions the covered wall-clock exactly
+        per_bucket = occ.groupBy("series_key", "bucket_ts") \
+            .agg(F.sum("state_us").alias("s"))
+        joined = per_bucket.join(
+            top.select("series_key", "bucket_ts", "state_top_us"),
+            ["series_key", "bucket_ts"])
+        assert joined.filter(
+            F.col("state_top_us") > F.col("s")).count() == 0
+        tr.unpersist()
