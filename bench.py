@@ -75,6 +75,13 @@ def ensure_transcripts(spark) -> str:
     return TRANSCRIPT_CACHE
 
 
+# Spark settings of the scaling-gate legs only (see run_bench)
+SCALING_LEG_CONF = {
+    "spark.sql.inMemoryColumnarStorage.compressed": "false",
+    "spark.sql.adaptive.enabled": "false",
+}
+
+
 def run_bench(cores: str, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
@@ -119,8 +126,7 @@ def run_bench(cores: str, sf_dir: str) -> dict:
         #    ratio toward 1/4. Production keeps AQE on for its general
         #    wins; the gate legs measure the ENGINE's scaling, not a
         #    constant driver floor.
-        extra_conf["spark.sql.inMemoryColumnarStorage.compressed"] = "false"
-        extra_conf["spark.sql.adaptive.enabled"] = "false"
+        extra_conf.update(SCALING_LEG_CONF)
     # Shuffle on tmpfs when available: the sandbox has ONE virtio disk that
     # saturates at any core count and would measure the host, not the
     # engine. Real clusters put spark.local.dir on per-node NVMe.
@@ -531,6 +537,7 @@ def run_scaling() -> dict:
     """
     lo, hi = SCALING_LEVELS
     factor = int(hi) / int(lo)
+    leg_repeats = os.environ.get("BENCH_LEG_REPEATS", "2")
     runs: dict[str, list[dict]] = {lo: [], hi: []}
     for _ in range(SCALING_REPEATS):
         for cores in (lo, hi):
@@ -542,8 +549,7 @@ def run_scaling() -> dict:
                    # queries; events + micro sections play no part
                    "BENCH_TRANSCRIPTS_ONLY": "1",
                    "BENCH_SCALING_LEG": "1",
-                   "BENCH_LEG_REPEATS": os.environ.get(
-                       "BENCH_LEG_REPEATS", "2"),
+                   "BENCH_LEG_REPEATS": leg_repeats,
                    "BENCH_SKIP_MICRO": "1"}
             if SCALING_MODE == "executors":
                 assert int(cores) % 4 == 0, "executor legs are 4-core JVMs"
@@ -582,6 +588,17 @@ def run_scaling() -> dict:
         "value": round(eff, 3),
         "unit": "ratio",
         "mode": SCALING_MODE,
+        # the bench-only Spark config and timing the legs ran under (see
+        # run_bench's BENCH_SCALING_LEG branch), so the number is
+        # comparable only with runs that record the same leg_config
+        "leg_config": {
+            "spark_conf": SCALING_LEG_CONF,
+            "leg_repeats": int(leg_repeats),
+            "scaling_repeats": SCALING_REPEATS,
+            "load_gate": LOAD_GATE,
+            "levels": [int(lo), int(hi)],
+            "mode": SCALING_MODE,
+        },
         f"throughput_local{lo}_pts_per_sec": round(thr_lo),
         f"throughput_local{hi}_pts_per_sec": round(thr_hi),
         "best_times": best,

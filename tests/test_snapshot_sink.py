@@ -2,6 +2,9 @@
 versioned table, exactly-once under foreachBatch's at-least-once
 re-delivery, resumable from the stream checkpoint without duplicates."""
 
+import os
+import time
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -41,6 +44,12 @@ def _stage(tmp_path, n_files=2):
          "value": [0.0]})
     sentinel["ts"] = sentinel["ts"].astype("datetime64[us]")
     sentinel.to_parquet(d / "z_sentinel.parquet", index=False)
+    # FileStreamSource batches in mtime order and breaks same-millisecond
+    # ties by listing order — pin the arrival order explicitly
+    now = time.time()
+    names = [f"b{i}.parquet" for i in range(n_files)] + ["z_sentinel.parquet"]
+    for i, name in enumerate(names):
+        os.utime(d / name, (now + i * 10, now + i * 10))
     return str(d), pdf
 
 

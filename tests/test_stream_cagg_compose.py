@@ -14,6 +14,9 @@ Two shapes, both promised by the module docstrings:
 Every level must equal a from-scratch rollup of all streamed rows.
 """
 
+import os
+import time
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -59,6 +62,12 @@ def _stage(src_dir, name, pdf, sentinel_minute):
     s["ts"] = s["ts"].astype("datetime64[us]")
     s.to_parquet(src_dir / f"z{sentinel_minute:05d}_sentinel.parquet",
                  index=False)
+    # FileStreamSource batches in mtime order and breaks same-millisecond
+    # ties by listing order — pin data before sentinel explicitly
+    now = time.time()
+    for i, f in enumerate((f"{name}.parquet",
+                           f"z{sentinel_minute:05d}_sentinel.parquet")):
+        os.utime(src_dir / f, (now + i * 10, now + i * 10))
 
 
 def _drain(spark, src_dir, ckpt, sink_fn, transform=None):
