@@ -505,33 +505,36 @@ SCALING_LEVELS = os.environ.get("BENCH_SCALING_LEVELS", "4,16").split(",")
 #    N->4N comparisons start from N executors that already shuffle
 #    remotely). Reported as supplementary evidence with that caveat.
 SCALING_MODE = os.environ.get("BENCH_SCALING_MODE", "threads")
-# Wait for the host's EXTERNAL load to drop below this before starting a
-# leg (0 disables). The sandbox shares cores with other tenants; a leg
+# Wait for the total host 1-min loadavg to drop below this before starting
+# a leg (0 disables). The sandbox shares cores with other tenants; a leg
 # that starts into a co-tenant burst measures the burst, not the engine —
 # asymmetrically, because the 16-core leg needs 4x more free cores than
-# the 4-core leg. Every raw repeat is still recorded in all_runs.
+# the 4-core leg. The loadavg also still carries the decaying load of the
+# previous leg, so it bounds co-tenant load from above; each leg records
+# the 1- and 5-min values it started at. Every raw repeat is still
+# recorded in all_runs.
 LOAD_GATE = float(os.environ.get("BENCH_LOAD_GATE", "1.0"))
 LOAD_GATE_TIMEOUT_S = int(os.environ.get("BENCH_LOAD_GATE_TIMEOUT_S", "900"))
 
 
-def _wait_quiet() -> float:
-    """Block until 1-min loadavg < LOAD_GATE (or timeout); returns the
-    loadavg observed at release."""
+def _wait_quiet() -> dict:
+    """Block until the total host 1-min loadavg < LOAD_GATE (or timeout);
+    returns the 1- and 5-min loadavg observed at release."""
     t0 = time.time()
-    load = os.getloadavg()[0]
-    while LOAD_GATE and load >= LOAD_GATE:
+    load = os.getloadavg()
+    while LOAD_GATE and load[0] >= LOAD_GATE:
         if time.time() - t0 > LOAD_GATE_TIMEOUT_S:
             break
         time.sleep(15)
-        load = os.getloadavg()[0]
-    return load
+        load = os.getloadavg()
+    return {"1m": load[0], "5m": load[1]}
 
 
 def run_scaling() -> dict:
     """Same transcript pipeline at two pinned cluster sizes (N vs 4N).
 
-    The sandbox host carries unpredictable background load (loadavg ~6 from
-    outside this namespace), so each level runs SCALING_REPEATS times in
+    The sandbox host carries unpredictable background load (total host
+    loadavg ~6), so each level runs SCALING_REPEATS times in
     alternation and the per-query MINIMUM is used — the standard
     least-interference estimator for wall-clock benchmarks on shared hosts.
     """

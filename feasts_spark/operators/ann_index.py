@@ -16,7 +16,7 @@ loop ContinuousAggregate gives rollup tiers:
                            row-identical to assigning the whole corpus
                            with the same frozen centroids.
   - replace/upsert/
-    delete/evolve       -> RECOMPUTE the dirty ids: delete their
+    delete              -> RECOMPUTE the dirty ids: delete their
                            assignment rows (key-addressed, bloom-pruned),
                            re-assign the ids still present at the pinned
                            source head, append. Erasure in the corpus
@@ -251,7 +251,7 @@ class AnnIndexView:
             stats.update(mode="full", rows_assigned=n_rows, retrained=True)
             return stats
 
-        # replace / upsert / delete / evolve (or an expired mid-range
+        # replace / upsert / delete (or an expired mid-range
         # manifest): key-addressed recompute of exactly the dirty ids
         post = self.source.read_changes(cur, head)
         pre = self.source.read_removed(cur, head)
@@ -259,7 +259,8 @@ class AnnIndexView:
             if self.id_col not in df_.columns:
                 raise ValueError(
                     f"ann index {self.name} {side} lost column "
-                    f"{self.id_col!r} — source schema evolved?")
+                    f"{self.id_col!r} — source overwritten with another "
+                    "schema?")
         dirty = (
             post.select(self.id_col)
             .unionByName(pre.select(self.id_col))

@@ -100,14 +100,14 @@ _KEY_COLS = ["series_key", "bucket_ts"]
 
 def _require_cols(df, cols, what: str) -> None:
     """Loud failure when an invalidation input lost a load-bearing column
-    (e.g. evolve_drop_columns removed the cagg's key/ts): the permissive
-    union below would otherwise NULL-fill it and silently skip
-    invalidation."""
+    (e.g. an overwrite gave the source a shape without the cagg's key/ts):
+    the permissive union below would otherwise NULL-fill it and silently
+    skip invalidation."""
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(
             f"{what} is missing column(s) {missing} — was the source "
-            "schema evolved out from under this consumer?")
+            "overwritten with another schema under this consumer?")
 
 
 # ----- shared cursor / change-classification machinery ---------------------
@@ -356,9 +356,10 @@ class ContinuousAggregate:
             dirty = delta_tier.select(*_KEY_COLS)
         else:
             mode = "recompute"
-            # allowMissingColumns: a schema evolution between cursor and
-            # head gives the pre-image the old shape — invalidation only
-            # needs key+ts, whose presence the guard enforces loudly
+            # allowMissingColumns: an overwrite with another schema
+            # between cursor and head gives the pre-image the old shape —
+            # invalidation only needs key+ts, whose presence the guard
+            # enforces loudly
             post = self.source.read_changes(cur, head)
             pre = self.source.read_removed(cur, head)
             for side, df_ in (("post-image", post), ("pre-image", pre)):
@@ -399,17 +400,16 @@ class ContinuousAggregate:
                     F.broadcast(dirty), _KEY_COLS, "left_semi")
             out = clean.select(refreshed.columns).unionByName(refreshed)
             last = i == len(runs) - 1
-            self.target.retrying(
+            v = self.target.retrying(
                 self.target.replace_where, out, "bucket_ts", lo, hi,
                 extra_summary=cursor_summary if last
                 else {"cagg_name": self.name, **_IN_PROGRESS},
             )
+            m = self.target.manifest(v)
+            before = {f["path"] for f in
+                      self.target.manifest(m["parent"])["files"]}
             rows_written += sum(
-                f["rows"] for f in self.target.manifest()["files"]
-                if f["path"] not in {
-                    x["path"] for x in self.target.manifest(
-                        self.target.current_version() - 1)["files"]}
-            )
+                f["rows"] for f in m["files"] if f["path"] not in before)
         self._write_sidecar(head)
         stats.update(mode=mode, dirty_buckets=len(buckets),
                      commits=len(runs), rows_written=rows_written)

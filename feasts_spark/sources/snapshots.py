@@ -20,10 +20,18 @@ an atomic pointer, not its code):
   racing from the same parent deterministically leave one winner; the loser
   gets :class:`SnapshotConflict`, cleans up its staging files, and retries
   against the new head.
-- **Time travel.** ``read(version=...)`` / ``read(as_of=...)`` resolve any
+- **Time travel.** ``read(version=...)`` / ``read(tag=...)`` resolve any
   retained manifest; readers pinned to a version see an immutable file set
   regardless of concurrent commits — a refresh/compaction never disturbs a
   running query.
+- **One schema per manifest.** Every file a manifest lists is read with
+  that manifest's ``schema``. ``append``, ``replace_where`` and ``publish``
+  pin it (names + types, see ``_normalized``); only ``overwrite``, which
+  replaces every file, can change it. Manifests from older builds may
+  carry a schema-era log (``schema_sid``, ``schemas``, ``next_fid`` and a
+  ``sid`` per file): one whose files all sit in the current era reads and
+  commits like any other, and one whose files span eras is refused with a
+  ``ValueError`` rather than misread (``_check_one_era``).
 - **File-level pruning.** ``read_where(col, lo, hi)`` selects manifest
   entries by footer min/max before Spark ever lists or opens a file — the
   manifest replaces the O(files) storage listing that kills naive parquet
@@ -106,60 +114,6 @@ def _normalized(schema: StructType) -> StructType:
         return dt
 
     return norm(schema)
-
-
-_INT_WIDTHS = {"byte": 0, "short": 1, "integer": 2, "long": 3}
-
-
-def _widenable(old_dt, new_dt) -> bool:
-    """Whether `old_dt` -> `new_dt` is a lossless widening (the Iceberg
-    promotion set): smaller int family -> larger, float -> double."""
-    o, n = old_dt.typeName(), new_dt.typeName()
-    if o in _INT_WIDTHS and n in _INT_WIDTHS:
-        return _INT_WIDTHS[n] > _INT_WIDTHS[o]
-    return o == "float" and n == "double"
-
-
-def _fid(field) -> int | None:
-    """The field's stable column id, or None for a pre-era schema."""
-    try:
-        return field.metadata.get("fid")
-    except Exception:
-        return None
-
-
-def _fid_annotated(schema: StructType, next_fid: int,
-                   carry_from: StructType | None = None
-                   ) -> tuple[StructType, int]:
-    """`schema` with a stable integer `fid` in every top-level field's
-    metadata — the Iceberg-field-ID equivalent that makes renames and
-    type widenings resolvable per file era.
-
-    Field identity is decided HERE, never taken from the incoming
-    schema: only the table's own canonical manifests are authoritative
-    for fids, and a writer frame produced by reading ANOTHER snapshot
-    table carries that table's fids in its metadata — trusting those
-    would seed this table with foreign ids (and next_fid=0), so a later
-    evolve_add could mint a DUPLICATE fid and era reads would silently
-    resurrect the wrong column's bytes. A same-NAME field of
-    `carry_from` (this table's parent schema) donates its fid
-    (add/drop/widen keep identity by name); any other field is new and
-    takes the next id. `next_fid` is also advanced past every carried
-    fid, so ids stay unique even across unusual histories."""
-    from pyspark.sql.types import StructField
-
-    by_name = {f.name: _fid(f) for f in carry_from.fields} if carry_from \
-        else {}
-    fields = []
-    for f in schema.fields:
-        fid = by_name.get(f.name)
-        if fid is None:
-            fid, next_fid = next_fid, next_fid + 1
-        md = {k: v for k, v in dict(f.metadata or {}).items() if k != "fid"}
-        md["fid"] = fid
-        fields.append(StructField(f.name, f.dataType, f.nullable, md))
-    next_fid = max([next_fid] + [_fid(f) + 1 for f in fields])
-    return StructType(fields), next_fid
 
 
 def _json_safe(v):
@@ -290,7 +244,6 @@ class SnapshotTable:
     def __init__(self, spark: SparkSession, root: str, name: str,
                  stats_cols: tuple[str, ...] = (),
                  cluster_cols: tuple[str, ...] | None = None,
-                 cluster_mode: str = "range",
                  bloom_cols: tuple[str, ...] = (),
                  bloom_max_bytes: int = 32 * 1024,
                  bloom_max_distinct: int = 1 << 18):
@@ -307,14 +260,6 @@ class SnapshotTable:
         # into one task)
         self.cluster_cols = self.stats_cols if cluster_cols is None \
             else tuple(cluster_cols)
-        # "range": lexicographic repartitionByRange over cluster_cols —
-        # prunes the FIRST column sharply, later columns barely.
-        # "zorder": bit-interleaved space-filling curve over ALL cluster
-        # columns — every column's footer window narrows, so
-        # multi-dimensional read_where_all prunes on each predicate.
-        if cluster_mode not in ("range", "zorder"):
-            raise ValueError(f"unknown cluster_mode {cluster_mode!r}")
-        self.cluster_mode = cluster_mode
         # key columns that get a per-file bloom in the manifest (see the
         # module-level bloom notes); a file whose distinct-key count
         # exceeds bloom_max_distinct records no bloom (= never pruned) so
@@ -447,128 +392,6 @@ class SnapshotTable:
             out[t["name"]] = int(t["version"])
         return out
 
-    # ----- inspection metadata tables --------------------------------------
-    # The Iceberg-style `table.files` / `table.snapshots` surface: table
-    # metadata as Spark DataFrames so maintenance questions (file-size
-    # skew, stats-window overlap, commit cadence, dead-row ratio) are
-    # answerable with the same query engine as the data. Manifests are
-    # driver-side JSON by design (O(files) metadata, no data pages read),
-    # so building the frame from them adds nothing the reader didn't
-    # already pay; at 10^6-file scale the frame is still only ~10^6 tiny
-    # rows — parallelize() handles that fine.
-
-    def inspect_files(self, version: int | None = None) -> DataFrame:
-        """One row per live data file of a snapshot: path, rows, bytes,
-        and the footer-stats window per stats column (stringified min/max
-        + may-have-nulls), plus which columns carry a manifest bloom."""
-        m = self._resolve(version, None)
-        rows = [
-            {
-                "version": m["version"],
-                "path": f["path"],
-                "rows": int(f["rows"]),
-                "bytes": int(f["bytes"]),
-                # missing footer stats stay SQL NULL — stringifying None
-                # would break isNull() maintenance queries
-                "min": {k: None if v is None else str(v)
-                        for k, v in f.get("min", {}).items()},
-                "max": {k: None if v is None else str(v)
-                        for k, v in f.get("max", {}).items()},
-                "may_have_nulls": dict(f.get("nulls", {})),
-                "bloom_cols": sorted(f.get("bloom", {})),
-            }
-            for f in m["files"]
-        ]
-        schema = (
-            "version long, path string, rows long, bytes long, "
-            "min map<string,string>, max map<string,string>, "
-            "may_have_nulls map<string,boolean>, bloom_cols array<string>"
-        )
-        return self.spark.createDataFrame(rows, schema)
-
-    def inspect_snapshots(self) -> DataFrame:
-        """One row per retained snapshot: `history()` as a DataFrame,
-        plus the writer's summary (stringified — writers put micro-batch
-        ids, refresh cursors, staged ids there, so exactly-once and WAP
-        audits are queryable). Tags pinned to a version appear in its
-        `tags` array."""
-        by_version: dict[int, list[str]] = {}
-        for name, v in sorted(self.tags().items()):
-            by_version.setdefault(v, []).append(name)
-        rows = [
-            {
-                **{k: h[k] for k in (
-                    "version", "parent", "operation", "n_files",
-                    "total_rows", "total_bytes",
-                )},
-                "committed_at": float(h["committed_at"] or 0.0),
-                "summary": {k: str(v) for k, v in h["summary"].items()},
-                "tags": by_version.get(h["version"], []),
-            }
-            for h in self.history()
-        ]
-        schema = (
-            "version long, parent long, operation string, "
-            "committed_at double, n_files long, total_rows long, "
-            "total_bytes long, summary map<string,string>, "
-            "tags array<string>"
-        )
-        return self.spark.createDataFrame(rows, schema)
-
-    def _zorder_value(self, df: DataFrame, cluster: list[str]):
-        """Z-value column: per cluster column, min/max-scale the batch to
-        a bits_per_col-bit bucket, then interleave the bits (bit b of
-        column c lands at position b*n+c). Timestamps scale on micros,
-        numerics on their double value; NULLs bucket to 0 (they sort
-        first, same as range clustering). The min/max come from ONE
-        single-row aggregate over the batch — a driver scalar, not a
-        shuffle — and a constant column degenerates to bucket 0, which
-        the interleave simply ignores."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import TimestampNTZType, TimestampType
-
-        n = len(cluster)
-        bits = min(16, 63 // n)
-        hi_bucket = (1 << bits) - 1
-
-        def as_num(c):
-            dt = df.schema[c].dataType
-            if isinstance(dt, (TimestampType, TimestampNTZType)):
-                return F.unix_micros(F.col(c).cast("timestamp")).cast("double")
-            return F.col(c).cast("double")
-
-        stats = df.agg(*[
-            x
-            for c in cluster
-            for x in (F.min(as_num(c)).alias(f"mn_{c}"),
-                      F.max(as_num(c)).alias(f"mx_{c}"))
-        ]).first()
-        buckets = []
-        for c in cluster:
-            mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-            if mn is None or mx is None or mx <= mn:
-                buckets.append(F.lit(0).cast("long"))
-                continue
-            scaled = F.floor(
-                (as_num(c) - F.lit(float(mn)))
-                / F.lit(float(mx - mn))
-                * F.lit(float(hi_bucket))
-            ).cast("long")
-            buckets.append(F.coalesce(
-                F.least(F.greatest(scaled, F.lit(0)), F.lit(hi_bucket)),
-                F.lit(0),
-            ))
-        z = F.lit(0).cast("long")
-        for b in range(bits):
-            for ci, bk in enumerate(buckets):
-                z = z.bitwiseOR(
-                    F.shiftleft(
-                        F.shiftright(bk, b).bitwiseAND(F.lit(1)),
-                        b * n + ci,
-                    )
-                )
-        return z
-
     # ----- commit path ----------------------------------------------------
 
     def _stage_files(self, df: DataFrame, sort_within: bool,
@@ -592,24 +415,13 @@ class SnapshotTable:
         cluster = [c for c in self.cluster_cols if c in df.columns]
         if cluster and sort_within:
             tf = [target_files] if target_files else []
-            if self.cluster_mode == "zorder" and len(cluster) >= 2:
-                # Z-ORDER: interleave the bits of min/max-scaled bucket
-                # indices so EVERY cluster column's footer window narrows
-                # (lexicographic range clustering narrows only the first
-                # column; the rest span everything). All-JVM expressions;
-                # the batch min/max scalars are one O(1) agg.
-                z = self._zorder_value(df, cluster)
-                df = (df.withColumn("_z", z)
-                        .repartitionByRange(*tf, "_z")
-                        .sortWithinPartitions("_z")
-                        .drop("_z"))
-            else:
-                # RANGE partitioning (not hash): adjacent stat values land
-                # in the same file, so footer [min, max] windows are narrow
-                # and disjoint — that is what makes read_where/
-                # replace_where prune instead of touching every file.
-                df = df.repartitionByRange(*tf, *cluster)
-                df = df.sortWithinPartitions(*cluster)
+            # RANGE partitioning (not hash): adjacent stat values land in
+            # the same file, so footer [min, max] windows are narrow and
+            # disjoint — that is what makes read_where/replace_where prune
+            # instead of touching every file. Lexicographic, so the FIRST
+            # cluster column prunes sharply and later ones barely.
+            df = df.repartitionByRange(*tf, *cluster)
+            df = df.sortWithinPartitions(*cluster)
         df.write.mode("error").parquet(commit_dir)
         entries = []
         for path in sorted(glob.glob(os.path.join(commit_dir, "*.parquet"))):
@@ -672,66 +484,26 @@ class SnapshotTable:
             entries.append(entry)
         return commit_dir, entries
 
-    def _era_update(self, parent: dict, schema_json: str,
-                    files: list[dict],
-                    era_override: dict | None) -> tuple[str, dict]:
-        """Schema-era bookkeeping for a commit: (canonical schema_json,
-        {schema_sid, schemas, next_fid}).
-
-        Every manifest records per-file `sid` pointers into a `schemas`
-        era log; each era's fields carry stable fids (`_fid_annotated`),
-        so reads resolve renames/widenings per file. New-file entries are
-        stamped with this commit's sid here; carried entries keep theirs
-        (a legacy entry without one is by-name compatible with the
-        current schema — stamping it with the current sid IS the by-name
-        read it gets today). Eras no live file references are pruned."""
-        if era_override is not None:
-            sid = era_override["schema_sid"]
-            schemas = dict(era_override["schemas"])
-            next_fid = era_override["next_fid"]
-            schema_json = era_override["schema"]
-        else:
-            p_sid = parent.get("schema_sid")
-            if parent["schema"] is None or p_sid is None:
-                # first commit, or a pre-era manifest: era 0 opens with
-                # the (annotated) commit schema; all existing files are
-                # by-name compatible with it
-                st, next_fid = _fid_annotated(
-                    StructType.fromJson(json.loads(schema_json)), 0)
-                sid, schemas, schema_json = 0, {}, st.json()
-            else:
-                new_schema = StructType.fromJson(json.loads(schema_json))
-                p_schema = StructType.fromJson(json.loads(parent["schema"]))
-                if _normalized(new_schema) == _normalized(p_schema):
-                    schema_json = parent["schema"]
-                    sid, next_fid = p_sid, parent["next_fid"]
-                    schemas = dict(parent["schemas"])
-                else:
-                    # shape changed without an explicit evolve (overwrite
-                    # with a new schema, evolve_add/drop/widen): new era,
-                    # field identity carried by name
-                    st, next_fid = _fid_annotated(
-                        new_schema, parent["next_fid"], carry_from=p_schema)
-                    sid = p_sid + 1
-                    schemas = dict(parent["schemas"])
-                    schema_json = st.json()
-        schemas[str(sid)] = schema_json
-        for f in files:
-            f.setdefault("sid", sid)
-        used = {str(f["sid"]) for f in files} | {str(sid)}
-        return schema_json, {
-            "schema_sid": sid,
-            "schemas": {k: v for k, v in schemas.items() if k in used},
-            "next_fid": next_fid,
-        }
+    def _check_one_era(self, m: dict) -> None:
+        """Refuse a manifest whose files span schema eras. Older builds
+        wrote an era log (`schema_sid`, `schemas`, a `sid` per file) so
+        renamed or widened columns could be mapped per file; this layer
+        reads every file with the manifest's one schema, which is right
+        only when all files sit in its current era. Anything else is
+        raised, never misread."""
+        cur = m.get("schema_sid")
+        if any(f.get("sid", cur) != cur for f in m["files"]):
+            raise ValueError(
+                f"snapshot table {self.name!r} version {m['version']}: its "
+                "files span more than one schema era (written by schema "
+                "evolution, which this build no longer supports); it can "
+                "be neither read nor committed on")
 
     def _commit(self, files: list[dict], operation: str, parent_manifest: dict,
-                schema_json: str, summary: dict,
-                era_override: dict | None = None) -> int:
+                schema_json: str, summary: dict) -> int:
+        self._check_one_era(parent_manifest)
         parent_v = parent_manifest["version"]
         new_v = parent_v + 1
-        schema_json, era = self._era_update(
-            parent_manifest, schema_json, files, era_override)
         manifest = {
             "version": new_v,
             "parent": parent_v,
@@ -739,9 +511,11 @@ class SnapshotTable:
             "committed_at": time.time(),
             "schema": schema_json,
             "stats_cols": list(self.stats_cols),
-            "files": files,
+            # entries carried from an older build's manifest drop their
+            # era pointer: this manifest records no eras
+            "files": [{k: v for k, v in f.items() if k != "sid"}
+                      for f in files],
             "summary": summary,
-            **era,
         }
         path = self._manifest_path(new_v)
         # Write the manifest in full to a tmp file, then publish it with an
@@ -771,16 +545,13 @@ class SnapshotTable:
                 raise ValueError(
                     "schema mismatch vs current snapshot: "
                     f"{old.simpleString()} != {df.schema.simpleString()}; "
-                    "snapshot tables pin the schema per version — use "
-                    "aligned(df) to upgrade a pre-evolution writer frame, "
-                    "or evolve_add_columns/evolve_drop_columns/"
-                    "evolve_rename_column/evolve_widen_column to change "
-                    "the pinned shape"
+                    "snapshot tables pin the schema per version — select "
+                    "the frame into the pinned shape, or overwrite() the "
+                    "whole table to change it"
                 )
-            # the shapes are equal: store the table's CANONICAL schema
-            # (it carries the stable field ids; a writer frame does not),
-            # so the pin — and the fid annotations — never drift commit
-            # to commit on writer-side nullability noise
+            # the shapes are equal: store the table's CANONICAL schema so
+            # the pin never drifts commit to commit on writer-side
+            # nullability noise
             return parent["schema"]
         return df.schema.json()
 
@@ -844,8 +615,8 @@ class SnapshotTable:
 
         `operation` is 'append' or 'overwrite' — resolved against the
         head at PUBLISH time, not stage time. Schema is checked against
-        the current head here (fail fast) and again at publish (the head
-        may evolve in between)."""
+        the current head here (fail fast) and again at publish (an overwrite
+        may change it in between)."""
         if operation not in ("append", "overwrite"):
             raise ValueError(f"unsupported staged operation: {operation}")
         parent = self.manifest()
@@ -930,7 +701,7 @@ class SnapshotTable:
                 if old != new:
                     raise ValueError(
                         "staged schema no longer matches the table head "
-                        "(it evolved after stage); abandon and restage"
+                        "(it changed after stage); abandon and restage"
                     )
             files = (parent["files"] + s["files"]
                      if s["operation"] == "append" else s["files"])
@@ -975,17 +746,16 @@ class SnapshotTable:
         parent = self.manifest()
         schema_json = self._check_schema(df_new, parent)
         lo_s, hi_s = _bound_safe(lo), _bound_safe(hi)
-        nm = self._stat_lookup(parent, col)
         kept, straddle, dropped = [], [], 0
         for f in parent["files"]:
-            fmin = f["min"].get(nm(f))
-            fmax = f["max"].get(nm(f))
+            fmin = f["min"].get(col)
+            fmax = f["max"].get(col)
             if fmin is None or fmax is None:
                 straddle.append(f)  # no stats -> must assume it intersects
             elif fmax < lo_s or fmin > hi_s:
                 kept.append(f)
             elif lo_s <= fmin and fmax <= hi_s \
-                    and not _may_have_nulls(f, nm(f)):
+                    and not _may_have_nulls(f, col):
                 # fully inside the replace range (and no NULL rows, which
                 # would survive the predicate): zero survivors — drop the
                 # file WITHOUT reading it. This is the hot case for a
@@ -996,7 +766,6 @@ class SnapshotTable:
                 straddle.append(f)
         out = df_new
         if straddle:
-            # via _read_files so older-era files map to the current shape
             old = self._read_files(parent, straddle)
             from pyspark.sql import functions as F
             # NULL range values never match the replace predicate, so they
@@ -1019,184 +788,6 @@ class SnapshotTable:
             shutil.rmtree(commit_dir, ignore_errors=True)
             raise
 
-    # ----- schema evolution ----------------------------------------------
-
-    def evolve_add_columns(self, cols: dict[str, str]) -> int:
-        """Metadata-only ADD COLUMN: a new snapshot with the SAME data
-        files and an evolved schema — no data is read or written, so the
-        cost is one manifest regardless of table size. Old files simply
-        lack the column and every read materializes NULL for them (Spark
-        parquet reads with an explicit schema fill missing columns with
-        NULL); new appends must carry it — use :meth:`aligned` to upgrade
-        a legacy writer frame. `cols` maps name -> Spark DDL type
-        ("double", "array<string>", ...). Added columns are nullable by
-        construction (old rows have no value). Time travel keeps the
-        per-version schema: reading a pre-evolution snapshot returns the
-        old shape. Renames and lossless type promotions live in
-        :meth:`evolve_rename_column` / :meth:`evolve_widen_column`,
-        resolved per file era by stable field ids.
-        """
-        parent = self.manifest()
-        if parent["schema"] is None:
-            raise ValueError(
-                "empty table has no schema to evolve; append with the "
-                "desired schema instead")
-        schema = StructType.fromJson(json.loads(parent["schema"]))
-        names = {f.name for f in schema.fields}
-        for name, ddl in cols.items():
-            if name in names:
-                raise ValueError(f"column {name!r} already exists")
-            from pyspark.sql.types import StructField
-            added = StructType.fromDDL(f"`{name}` {ddl}")
-            schema = StructType(
-                schema.fields
-                + [StructField(name, added.fields[0].dataType, True)]
-            )
-        return self._commit(
-            parent["files"], "evolve", parent, schema.json(),
-            {"added_columns": {n: d for n, d in cols.items()}},
-        )
-
-    def evolve_drop_columns(self, names) -> int:
-        """Metadata-only DROP COLUMN: same files, narrowed schema — reads
-        prune the column away (parquet column projection skips it at
-        I/O level), rewrites from now on omit it. Values remain in old
-        files until those are naturally rewritten; time travel to a
-        pre-drop version still sees them."""
-        names = [names] if isinstance(names, str) else list(names)
-        parent = self.manifest()
-        if parent["schema"] is None:
-            raise ValueError("empty table has no schema to evolve")
-        schema = StructType.fromJson(json.loads(parent["schema"]))
-        have = {f.name for f in schema.fields}
-        missing = [n for n in names if n not in have]
-        if missing:
-            raise ValueError(f"cannot drop absent columns: {missing}")
-        remaining = [f for f in schema.fields if f.name not in set(names)]
-        if not remaining:
-            raise ValueError("cannot drop every column")
-        return self._commit(
-            parent["files"], "evolve", parent,
-            StructType(remaining).json(),
-            {"dropped_columns": names},
-        )
-
-    def evolve_rename_column(self, old: str, new: str) -> int:
-        """Metadata-only RENAME COLUMN: same files, same field identity
-        (the stable fid carries), new name. Old files keep their bytes
-        untouched; reads resolve them through the manifest's schema-era
-        log (`_read_files` maps era fields to the current shape by fid),
-        and stats/bloom pruning translates the predicate name per file
-        era (`_stat_lookup`). Time travel to a pre-rename version sees
-        the old name. Note the table OBJECT's stats_cols/cluster_cols/
-        bloom_cols are constructor arguments — construct subsequent
-        writers with the new name so new files harvest stats under it."""
-        parent = self.manifest()
-        if parent["schema"] is None:
-            raise ValueError("empty table has no schema to evolve")
-        if parent.get("schema_sid") is None:
-            # a pre-era manifest gains era bookkeeping on its next DATA
-            # commit (any append/compact); renaming before that would
-            # leave old files unmappable
-            raise ValueError(
-                "table predates schema-era tracking; run any data commit "
-                "(e.g. compact) first, then rename")
-        from pyspark.sql.types import StructField
-        schema = StructType.fromJson(json.loads(parent["schema"]))
-        names = [f.name for f in schema.fields]
-        if old not in names:
-            raise ValueError(f"cannot rename absent column {old!r}")
-        if new in names:
-            raise ValueError(f"column {new!r} already exists")
-        new_schema = StructType([
-            StructField(new if f.name == old else f.name,
-                        f.dataType, f.nullable, dict(f.metadata or {}))
-            for f in schema.fields
-        ])
-        sid = parent["schema_sid"] + 1
-        schemas = dict(parent["schemas"])
-        return self._commit(
-            parent["files"], "evolve", parent, new_schema.json(),
-            {"renamed_columns": {old: new}},
-            era_override={
-                "schema_sid": sid, "schemas": schemas,
-                "next_fid": parent["next_fid"], "schema": new_schema.json(),
-            },
-        )
-
-    def evolve_widen_column(self, name: str, new_type_ddl: str) -> int:
-        """Metadata-only lossless type promotion (the Iceberg set:
-        byte/short/int -> wider int, float -> double). Old files keep
-        their narrow values; era reads cast them up by fid. Narrowing or
-        cross-family changes are rejected — they would need a rewrite
-        (and can silently lose data), which `replace_where`/`compact`
-        on a re-typed frame expresses honestly."""
-        parent = self.manifest()
-        if parent["schema"] is None:
-            raise ValueError("empty table has no schema to evolve")
-        from pyspark.sql.types import StructField
-        schema = StructType.fromJson(json.loads(parent["schema"]))
-        field = next((f for f in schema.fields if f.name == name), None)
-        if field is None:
-            raise ValueError(f"cannot widen absent column {name!r}")
-        new_dt = StructType.fromDDL(f"`{name}` {new_type_ddl}") \
-            .fields[0].dataType
-        if not _widenable(field.dataType, new_dt):
-            raise ValueError(
-                f"{field.dataType.simpleString()} -> "
-                f"{new_dt.simpleString()} is not a lossless widening "
-                "(allowed: byte/short/int -> wider int, float -> double)")
-        new_schema = StructType([
-            StructField(f.name, new_dt if f.name == name else f.dataType,
-                        f.nullable, dict(f.metadata or {}))
-            for f in schema.fields
-        ])
-        # the central era logic carries the fid by name and bumps the era
-        return self._commit(
-            parent["files"], "evolve", parent, new_schema.json(),
-            {"widened_columns": {name: new_type_ddl}},
-        )
-
-    def aligned(self, df: DataFrame) -> DataFrame:
-        """`df` upgraded to the current snapshot schema: missing NULLABLE
-        columns are added as typed NULLs and columns are reordered —
-        the convenience that lets a pre-evolution writer keep appending
-        after an ADD COLUMN. Missing non-nullable columns still raise
-        (there is no honest default for them)."""
-        from pyspark.sql import functions as F
-        parent = self.manifest()
-        if parent["schema"] is None:
-            return df
-        schema = StructType.fromJson(json.loads(parent["schema"]))
-        known = {f.name for f in schema.fields}
-        extra = [c for c in df.columns if c not in known]
-        if extra:
-            # silently projecting these away would lose data the writer
-            # clearly meant to keep
-            raise ValueError(
-                f"frame carries columns unknown to the snapshot schema: "
-                f"{extra}; call evolve_add_columns first (or drop them)")
-        out = df
-        writer_types = dict(zip(df.schema.names,
-                                [f.dataType for f in df.schema.fields]))
-        for f in schema.fields:
-            if f.name in out.columns:
-                # a pre-widen writer's narrow column upcasts losslessly;
-                # anything else passes through (and the schema pin at
-                # commit time stays the arbiter)
-                wt = writer_types[f.name]
-                if wt != f.dataType and _widenable(wt, f.dataType):
-                    out = out.withColumn(f.name,
-                                         F.col(f.name).cast(f.dataType))
-                continue
-            if not f.nullable:
-                raise ValueError(
-                    f"column {f.name!r} is non-nullable and absent "
-                    "from the frame")
-            out = out.withColumn(f.name,
-                                 F.lit(None).cast(f.dataType))
-        return out.select(*[f.name for f in schema.fields])
-
     def _split_by_keys(self, parent: dict, col: str, probe_keys
                        ) -> tuple[list[dict], list[dict]]:
         """(files that CANNOT hold any probe key, files that might).
@@ -1208,10 +799,9 @@ class SnapshotTable:
         if probe_keys is None:
             return [], list(parent["files"])
         h = _bloom_hash(list(probe_keys))
-        nm = self._stat_lookup(parent, col)
         kept, might = [], []
         for f in parent["files"]:
-            b = f.get("bloom", {}).get(nm(f))
+            b = f.get("bloom", {}).get(col)
             if b is None or _bloom_any_match(b, h):
                 might.append(f)
             else:
@@ -1379,113 +969,26 @@ class SnapshotTable:
 
     # ----- read path ------------------------------------------------------
 
-    def _resolve(self, version: int | None, as_of: float | None,
-                 tag: str | None = None) -> dict:
-        if tag is not None:
-            if version is not None or as_of is not None:
-                raise ValueError("pass exactly one of version/as_of/tag")
-            pinned = self.tags().get(tag)
-            if pinned is None:
-                raise ValueError(f"unknown tag {tag!r}")
-            return self.manifest(pinned)
-        if version is not None:
-            return self.manifest(version)
-        if as_of is not None:
-            best = None
-            for v in sorted(
-                int(os.path.basename(p)[1:-5])
-                for p in glob.glob(os.path.join(self.meta_dir, "v*.json"))
-            ):
-                m = self.manifest(v)
-                if m["committed_at"] <= as_of:
-                    best = m
-            if best is None:
-                raise ValueError(f"no snapshot committed at or before {as_of}")
-            return best
-        return self.manifest()
-
     def _read_files(self, m: dict, files: list[dict]) -> DataFrame:
+        self._check_one_era(m)
         schema = StructType.fromJson(json.loads(m["schema"]))
         if not files:
             return self.spark.createDataFrame([], schema)
-        eras = m.get("schemas")
-        cur_sid = m.get("schema_sid")
-        groups: dict = {}
-        for f in files:
-            groups.setdefault(f.get("sid"), []).append(f)
-        if not eras or set(groups) <= {None, cur_sid}:
-            return self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.table_dir, f["path"]) for f in files]
-            )
-        # files from older schema ERAS: read each era with the schema its
-        # files were written under, then map era fields to the current
-        # shape by stable fid — renamed columns re-alias, widened columns
-        # cast, columns added since materialize NULL, dropped ones prune
-        # (the projection pushes into the scan, so dropped-column bytes
-        # are never read). One union per era present in the file set.
-        from pyspark.sql import functions as F
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.table_dir, f["path"]) for f in files]
+        )
 
-        parts = []
-        for sid, fs in groups.items():
-            paths = [os.path.join(self.table_dir, f["path"]) for f in fs]
-            if sid in (None, cur_sid):
-                parts.append(self.spark.read.schema(schema).parquet(*paths))
-                continue
-            era = StructType.fromJson(json.loads(eras[str(sid)]))
-            by_fid = {_fid(fld): fld for fld in era.fields
-                      if _fid(fld) is not None}
-            raw = self.spark.read.schema(era).parquet(*paths)
-            cols = []
-            for fld in schema.fields:
-                src = by_fid.get(_fid(fld)) if _fid(fld) is not None else None
-                if src is None:
-                    cols.append(F.lit(None).cast(fld.dataType)
-                                .alias(fld.name))
-                elif src.dataType == fld.dataType:
-                    cols.append(F.col(src.name).alias(fld.name))
-                else:
-                    cols.append(F.col(src.name).cast(fld.dataType)
-                                .alias(fld.name))
-            parts.append(raw.select(*cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _stat_lookup(self, m: dict, col: str):
-        """entry -> the name under which this entry's footer stats and
-        bloom were recorded for current-schema column `col` (None when
-        the entry's era has no such field: stats unknown, never pruned).
-        Identity unless the manifest tracks eras and the entry predates
-        a rename of `col`."""
-        eras = m.get("schemas")
-        if not eras:
-            return lambda f: col
-        cur_sid = m.get("schema_sid")
-        cur = StructType.fromJson(json.loads(m["schema"]))
-        fid = next((_fid(f) for f in cur.fields if f.name == col), None)
-        cache: dict = {}
-
-        def name_for(sid):
-            if sid not in cache:
-                era = StructType.fromJson(json.loads(eras[str(sid)]))
-                cache[sid] = next(
-                    (f.name for f in era.fields if _fid(f) == fid), None)
-            return cache[sid]
-
-        def lookup(f):
-            sid = f.get("sid")
-            if sid in (None, cur_sid) or fid is None:
-                return col
-            return name_for(sid)
-
-        return lookup
-
-    def read(self, version: int | None = None, as_of: float | None = None,
+    def read(self, version: int | None = None,
              tag: str | None = None) -> DataFrame:
-        """Read a snapshot: head by default, or pinned version / as-of
-        time / named tag."""
-        m = self._resolve(version, as_of, tag)
+        """Read a snapshot: head by default, or pinned version / named
+        tag."""
+        if tag is not None:
+            if version is not None:
+                raise ValueError("pass exactly one of version/tag")
+            version = self.tags().get(tag)
+            if version is None:
+                raise ValueError(f"unknown tag {tag!r}")
+        m = self.manifest(version)
         if m["version"] == 0:
             raise ValueError("table has no snapshots yet")
         return self._read_files(m, m["files"])
@@ -1494,46 +997,19 @@ class SnapshotTable:
         """Manifest-pruned range read: skip files by footer stats, then
         apply the residual filter (which also pushes down into the
         surviving files' row groups)."""
-        m = self._resolve(version, None)
+        m = self.manifest(version)
         if m["version"] == 0:
             raise ValueError("table has no snapshots yet")
         lo_s, hi_s = _bound_safe(lo), _bound_safe(hi)
-        nm = self._stat_lookup(m, col)
         live = [
             f for f in m["files"]
-            if f["min"].get(nm(f)) is None or f["max"].get(nm(f)) is None
-            or not (f["max"][nm(f)] < lo_s or f["min"][nm(f)] > hi_s)
+            if f["min"].get(col) is None or f["max"].get(col) is None
+            or not (f["max"][col] < lo_s or f["min"][col] > hi_s)
         ]
         from pyspark.sql import functions as F
         return self._read_files(m, live).filter(
             F.col(col).between(F.lit(lo), F.lit(hi))
         )
-
-    def read_where_all(self, preds: dict, version: int | None = None
-                       ) -> DataFrame:
-        """Manifest-pruned MULTI-predicate range read: a file survives
-        only if its footer window overlaps EVERY [lo, hi] in `preds`
-        ({col: (lo, hi)}); the residual filters then push into the
-        surviving scans. With zorder clustering every predicate prunes;
-        with range clustering only the leading column's does — same
-        correctness, different file counts."""
-        m = self._resolve(version, None)
-        if m["version"] == 0:
-            raise ValueError("table has no snapshots yet")
-        live = m["files"]
-        for col, (lo, hi) in preds.items():
-            lo_s, hi_s = _bound_safe(lo), _bound_safe(hi)
-            nm = self._stat_lookup(m, col)
-            live = [
-                f for f in live
-                if f["min"].get(nm(f)) is None or f["max"].get(nm(f)) is None
-                or not (f["max"][nm(f)] < lo_s or f["min"][nm(f)] > hi_s)
-            ]
-        from pyspark.sql import functions as F
-        out = self._read_files(m, live)
-        for col, (lo, hi) in preds.items():
-            out = out.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
-        return out
 
     def files_for_keys(self, col: str, keys, version: int | None = None,
                        _manifest: dict | None = None
@@ -1548,7 +1024,7 @@ class SnapshotTable:
         (equality never selects NULL rows) and an all-NULL file carries
         an empty bloom, so it never survives a key probe.
         """
-        m = _manifest if _manifest is not None else self._resolve(version, None)
+        m = _manifest if _manifest is not None else self.manifest(version)
         if m["version"] == 0:
             raise ValueError("table has no snapshots yet")
         keys = [k for k in keys if k is not None]
@@ -1568,7 +1044,7 @@ class SnapshotTable:
         live in instead of the whole table (min/max can't help there —
         every file spans the full key range).
         """
-        m = self._resolve(version, None)
+        m = self.manifest(version)
         live, _ = self.files_for_keys(col, keys, _manifest=m)
         return self._read_files(m, live)
 
@@ -1587,7 +1063,7 @@ class SnapshotTable:
         manifest `operation` field. O(#files) manifest work, zero data I/O
         beyond the changed files themselves.
         """
-        to_m = self._resolve(to_version, None)
+        to_m = self.manifest(to_version)
         if to_m["version"] == 0:
             raise ValueError("table has no snapshots yet")
         if from_version > to_m["version"]:
@@ -1615,7 +1091,7 @@ class SnapshotTable:
         yet expired by `expire_snapshots`); raises FileNotFoundError-ish
         Spark errors if they were.
         """
-        to_m = self._resolve(to_version, None)
+        to_m = self.manifest(to_version)
         if from_version > to_m["version"]:
             raise ValueError(
                 f"from_version {from_version} is newer than to_version "
@@ -1645,14 +1121,13 @@ class SnapshotTable:
         """
         parent = self.manifest()
         cut_s = _bound_safe(cutoff)
-        nm = self._stat_lookup(parent, col)
         kept, gone, straddle = [], [], []
         for f in parent["files"]:
-            fmin = f["min"].get(nm(f))
-            fmax = f["max"].get(nm(f))
+            fmin = f["min"].get(col)
+            fmax = f["max"].get(col)
             if fmin is None or fmax is None:
                 straddle.append(f)  # no stats -> must inspect rows
-            elif fmax < cut_s and not _may_have_nulls(f, nm(f)):
+            elif fmax < cut_s and not _may_have_nulls(f, col):
                 gone.append(f)
             elif fmin >= cut_s:
                 kept.append(f)
@@ -1698,7 +1173,7 @@ class SnapshotTable:
         yields files whose footer windows span their union, so
         read_where skips less after every maintenance pass.
         `recluster=True` re-sorts the merged rows through the table's
-        clustering (range or z-order) at the same output file count —
+        range clustering at the same output file count —
         compaction then RESTORES pruning quality instead of spending it.
         """
         parent = self.manifest()

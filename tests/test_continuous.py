@@ -198,6 +198,73 @@ class TestRecomputeMode:
         assert s["mode"] == "full"
         _assert_synced(src, tgt, cagg)
 
+    def test_source_losing_ts_raises_loudly(self, spark, pair):
+        """A source overwritten into a shape without the cagg's ts column
+        must make refresh() raise, not go silently stale. The tag keeps
+        the cursor's manifest through expiry while the overwrite's goes,
+        so the refresh takes the recompute path and its image guard."""
+        src, tgt = pair
+        src.append(_turns(spark, 120))
+        cagg = ContinuousAggregate(src, tgt, "1h")
+        assert cagg.refresh()["mode"] == "full"
+        src.tag("cagg-cursor")
+        src.overwrite(_turns(spark, 60).withColumnRenamed("ts", "at"))
+        src.append(_turns(spark, 5, day=1).withColumnRenamed("ts", "at"))
+        src.expire_snapshots(keep_last=1)
+        with pytest.raises(ValueError, match=r"missing column.*'ts'"):
+            cagg.refresh()
+
+
+class TestRefreshAccounting:
+    def test_rows_written_costs_constant_manifest_reads(self, spark, pair):
+        """Each refresh commit diffs its own manifest against its parent
+        once: the target's manifest reads do not grow with its file
+        count, and rows_written is the rows of the files it added."""
+        src, tgt = pair
+        src.append(_turns(spark, 1500))  # 25 hourly buckets
+        cagg = ContinuousAggregate(src, tgt, "1h")
+        conf = {"spark.sql.adaptive.coalescePartitions.enabled": "false",
+                "spark.sql.shuffle.partitions": "24"}
+        prev = {k: spark.conf.get(k) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            cagg.refresh()
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+        n_files = len(tgt.manifest()["files"])
+        assert n_files >= 15
+        v0 = tgt.current_version()
+        # late rows in hours 1 and 22: two runs more than 16 buckets
+        # apart, so two replace commits
+        late = _turns(spark, 2, start_minute=61).union(
+            _turns(spark, 2, start_minute=22 * 60 + 1))
+        src.append(late)
+
+        calls = []
+        read_manifest = tgt.manifest
+
+        def spy(version=None):
+            calls.append(version)
+            return read_manifest(version)
+
+        tgt.manifest = spy
+        try:
+            st = cagg.refresh()
+        finally:
+            del tgt.manifest
+        assert st["mode"] == "merge" and st["commits"] == 2
+        assert len(calls) <= 6 * st["commits"] < n_files, calls
+        added = 0
+        for v in range(v0 + 1, tgt.current_version() + 1):
+            m = tgt.manifest(v)
+            before = {f["path"] for f in tgt.manifest(m["parent"])["files"]}
+            added += sum(f["rows"] for f in m["files"]
+                         if f["path"] not in before)
+        assert st["rows_written"] == added > 0
+        _assert_synced(src, tgt, cagg)
+
 
 class TestCascadeChain:
     """raw -> 1m (cagg) -> 1h (cascade) -> 1d (cascade): every level must

@@ -117,13 +117,3 @@ class TestTagRetention:
         table.expire_snapshots(keep_last=1, orphan_grace_s=0.0)
         with pytest.raises(FileNotFoundError):
             table.manifest(v)
-
-    def test_inspect_snapshots_shows_tags(self, spark, table):
-        table.append(_batch(spark, 10))
-        table.tag("a")
-        table.tag("b")
-        table.append(_batch(spark, 5, start=10))
-        snaps = {r["version"]: r["tags"]
-                 for r in table.inspect_snapshots().collect()}
-        assert sorted(snaps[1]) == ["a", "b"]
-        assert snaps[2] == []

@@ -1,10 +1,9 @@
-"""Write-audit-publish + inspection metadata tables on SnapshotTable.
+"""Write-audit-publish on SnapshotTable.
 
 WAP contract: staged rows are invisible until publish; a failing audit
 vetoes visibility; abandon reclaims the staged files; publish resolves
 against the head AT PUBLISH TIME and retries a lost O_EXCL race without
-rewriting data. Inspection: `inspect_files` / `inspect_snapshots` expose
-the manifests as queryable DataFrames that agree with the dict API.
+rewriting data.
 """
 
 import os
@@ -96,37 +95,6 @@ class TestWriteAuditPublish:
 
 
 class TestInspection:
-    def test_inspect_files_matches_manifest(self, spark, table):
-        table.append(_mk(spark, 100))
-        table.append(_mk(spark, 50, offset=100))
-        m = table.manifest()
-        df = table.inspect_files()
-        rows = {r["path"]: r for r in df.collect()}
-        assert set(rows) == {f["path"] for f in m["files"]}
-        assert sum(r["rows"] for r in rows.values()) == 150
-        # stats windows surfaced and queryable
-        widest = df.agg(F.max(F.col("max")["k"].cast("long"))).first()[0]
-        assert widest == 149
-        # version pinning: inspecting v1 shows only v1's files
-        assert table.inspect_files(version=1).agg(
-            F.sum("rows")
-        ).first()[0] == 100
-
-    def test_inspect_snapshots_is_the_commit_log(self, spark, table):
-        table.append(_mk(spark, 10))
-        sid = table.stage(_mk(spark, 5, offset=10))
-        table.publish(sid)
-        log = table.inspect_snapshots().orderBy("version").collect()
-        assert [r["version"] for r in log] == [1, 2]
-        assert [r["operation"] for r in log] == ["append", "append"]
-        assert log[1]["summary"]["staged_id"] == sid
-        assert log[1]["total_rows"] == 15
-        # agrees with the dict API
-        hist = table.history()
-        assert [(r["version"], r["n_files"]) for r in log] == [
-            (h["version"], h["n_files"]) for h in hist
-        ]
-
     def test_publish_of_expired_staging_fails_cleanly(self, spark, table):
         table.append(_mk(spark, 10))
         sid = table.stage(_mk(spark, 5, offset=10))

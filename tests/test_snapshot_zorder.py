@@ -1,10 +1,7 @@
-"""Z-order clustering: with cluster_mode="zorder" every cluster column's
-footer window narrows, so a multi-dimensional read_where_all prunes files
-on EVERY predicate — range clustering only prunes the leading column.
-Correctness is identical either way (pruning is a superset read + exact
-residual filter)."""
+"""Range clustering: lexicographic clustering prunes files on its leading
+column only, and compaction can either erode that pruning (arrival-order
+merge) or restore it (recluster)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from feasts_spark.sources.snapshots import SnapshotTable
@@ -24,7 +21,7 @@ def _grid(spark):
 
 def _mk(spark, tmp_path, mode):
     t = SnapshotTable(spark, str(tmp_path), f"t_{mode}",
-                      stats_cols=("x", "y"), cluster_mode=mode)
+                      stats_cols=("x", "y"))
     # force enough files for pruning to be observable
     t.append(_grid(spark), sort_within=True, target_files=16)
     return t
@@ -46,13 +43,6 @@ def _live_files(t, preds):
 
 
 class TestZorder:
-    def test_zorder_prunes_both_dimensions(self, spark, tmp_path):
-        tz = _mk(spark, tmp_path, "zorder")
-        live, total = _live_files(tz, BOX)
-        # the box covers ~1% of the plane; z-order should skip most files
-        assert total >= 8
-        assert live < total / 2, (live, total)
-
     def test_range_clustering_cannot_prune_trailing_dim(self, spark,
                                                         tmp_path):
         tr = _mk(spark, tmp_path, "range")
@@ -62,46 +52,6 @@ class TestZorder:
         # window spans the whole domain under lexicographic clustering
         assert live_x < total
         assert live_xy == live_x
-
-    def test_read_where_all_correct_under_both_modes(self, spark, tmp_path):
-        tz = _mk(spark, tmp_path / "z", "zorder")
-        tr = _mk(spark, tmp_path / "r", "range")
-        exp = (_grid(spark)
-               .filter(F.col("x").between(*BOX["x"])
-                       & F.col("y").between(*BOX["y"])))
-        for t in (tz, tr):
-            got = t.read_where_all(BOX)
-            assert got.count() == exp.count() > 0
-            assert got.agg(F.sum("payload")).first()[0] == \
-                exp.agg(F.sum("payload")).first()[0]
-
-    def test_zorder_single_column_falls_back_to_range(self, spark,
-                                                      tmp_path):
-        t = SnapshotTable(spark, str(tmp_path), "t1", stats_cols=("x",),
-                          cluster_mode="zorder")
-        t.append(_grid(spark).select("x", "payload"), target_files=8)
-        live, total = _live_files(t, {"x": (20.0, 40.0)})
-        assert live < total  # still clustered, still prunes
-
-    def test_bad_mode_rejected(self, spark, tmp_path):
-        with pytest.raises(ValueError, match="cluster_mode"):
-            SnapshotTable(spark, str(tmp_path), "t2", stats_cols=("x",),
-                          cluster_mode="hilbert")
-
-    def test_constant_and_null_columns_degrade_gracefully(self, spark,
-                                                          tmp_path):
-        t = SnapshotTable(spark, str(tmp_path), "t3",
-                          stats_cols=("x", "y"), cluster_mode="zorder")
-        df = spark.range(1000).select(
-            F.lit(5.0).alias("x"),  # constant -> bucket 0 for all rows
-            F.when(F.col("id") % 3 == 0, F.col("id").cast("double"))
-            .alias("y"),            # NULLs mixed in -> bucket 0
-            F.col("id").alias("payload"),
-        )
-        t.append(df)
-        assert t.read().count() == 1000
-        # NULL y rows must survive a read that doesn't filter on y
-        assert t.read_where_all({"x": (0.0, 10.0)}).count() == 1000
 
 
 class TestReclusteringCompaction:

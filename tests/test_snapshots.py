@@ -2,6 +2,7 @@
 compaction, expiry — and the rollup_refresh integration (file-level late-data
 refresh: untouched files carry over by reference)."""
 
+import json
 import os
 
 import pytest
@@ -36,12 +37,6 @@ class TestCommitAndTimeTravel:
         assert table.read().count() == 10
         # old snapshot still fully readable (immutably pinned files)
         assert table.read(version=1).count() == 100
-
-    def test_as_of_time(self, spark, table):
-        table.append(_mk(spark, 100))
-        t1 = table.manifest()["committed_at"]
-        table.append(_mk(spark, 100, offset=100))
-        assert table.read(as_of=t1).count() == 100
 
     def test_history_lineage(self, spark, table):
         table.append(_mk(spark, 10))
@@ -449,3 +444,85 @@ class TestManifestScale:
         assert df.count() == 0  # real files hold k<4096, residual filters all
         # an unpruned full read at this width is still constructible
         assert len(table.manifest(v)["files"]) == n
+
+
+def _write_era_manifest(table, sids=None):
+    """Rewrite the head manifest in the era format older builds wrote:
+    fid-annotated schema, `schema_sid`, `schemas`, `next_fid` and a `sid`
+    on every file (all 0 unless `sids` says otherwise)."""
+    m = table.manifest()
+    schema = json.loads(m["schema"])
+    for i, fld in enumerate(schema["fields"]):
+        fld["metadata"] = {"fid": i}
+    era0 = json.dumps(schema)
+    m["schema"] = era0
+    m["schema_sid"] = 0
+    m["schemas"] = {"0": era0}
+    m["next_fid"] = len(schema["fields"])
+    for i, f in enumerate(m["files"]):
+        f["sid"] = 0 if sids is None else sids[i]
+    if sids is not None and max(sids) > 0:
+        m["schemas"]["1"] = era0
+        m["schema_sid"] = max(sids)
+    with open(table._manifest_path(m["version"]), "w") as fh:
+        json.dump(m, fh)
+    return m["version"]
+
+
+_ERA_KEYS = ("schema_sid", "schemas", "next_fid")
+
+
+class TestLegacyEraManifest:
+    """Older builds kept a schema-era log in every manifest. One whose
+    files all sit in the current era must read and commit exactly as
+    before; one whose files span eras must be refused, never misread."""
+
+    def _rows(self, df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def _assert_era_free(self, table):
+        m = table.manifest()
+        assert not any(k in m for k in _ERA_KEYS)
+        assert not any("sid" in f for f in m["files"])
+
+    def test_single_era_manifest_reads_and_commits_unchanged(
+            self, spark, table):
+        table.append(_mk(spark, 100))
+        table.append(_mk(spark, 50, offset=100))
+        self._assert_era_free(table)
+        full = self._rows(table.read())
+        window = self._rows(table.read_where("k", 90, 120))
+        _write_era_manifest(table)
+        assert self._rows(table.read()) == full
+        assert self._rows(table.read_where("k", 90, 120)) == window
+
+        table.append(_mk(spark, 10, offset=500))
+        self._assert_era_free(table)
+        assert self._rows(table.read()) == sorted(
+            full + self._rows(_mk(spark, 10, offset=500)))
+
+        _write_era_manifest(table)
+        fixed = _mk(spark, 11, offset=100).withColumn("v", F.lit(-1.0))
+        table.replace_where(fixed, "k", 100, 110)
+        self._assert_era_free(table)
+        want = [r for r in full if not 100 <= r[0] <= 110]
+        want += self._rows(fixed) + self._rows(_mk(spark, 10, offset=500))
+        assert self._rows(table.read()) == sorted(want)
+
+    def test_multi_era_manifest_is_refused(self, spark, table):
+        table.append(_mk(spark, 100))
+        table.append(_mk(spark, 50, offset=100))
+        n = len(table.manifest()["files"])
+        v = _write_era_manifest(table, sids=[1] + [0] * (n - 1))
+        msg = f"'t' version {v}"
+        with pytest.raises(ValueError, match=msg):
+            table.read()
+        with pytest.raises(ValueError, match=msg):
+            table.read_where("k", 0, 10)
+        with pytest.raises(ValueError, match=msg):
+            table.append(_mk(spark, 10, offset=500))
+        assert table.current_version() == v
+        # lineage and retention never map columns, so they still work
+        assert [h["version"] for h in table.history()] == [1, 2]
+        table.expire_snapshots(keep_last=1)
+        assert [h["version"] for h in table.history()] == [2]

@@ -427,23 +427,6 @@ def main() -> None:
             ),
     })
 
-    # z-order clustered table: multi-predicate manifest pruning
-    zsnap = SnapshotTable(spark, snap_root, "zgrid",
-                          stats_cols=("ts", "value"),
-                          cluster_mode="zorder")
-    zsnap.append(ev.select("ts", "value", "event_id"), target_files=16)
-    zlo, zhi = ev.agg(F.min("value"), F.max("value")).collect()[0]
-    zpred = {"ts": (lo, lo + (hi - lo) / 8),
-             "value": (zlo, zlo + (zhi - zlo) / 8)}
-    zread = zsnap.read_where_all(zpred)
-    zn_live = len(zread.inputFiles())
-    zn_all = len(zsnap.manifest()["files"])
-    plans.update({
-        f"snapshot_read_where_all zorder (manifest pruned {zn_all}->"
-        f"{zn_live} files across BOTH predicates; residual filters "
-        "pushed into the surviving scan)": zread,
-    })
-
     from feasts_spark.operators.flow import conv_flow, conv_flow_sketch
 
     _flow_tr = ev.select(
