@@ -6,8 +6,9 @@ corpus snapshot: train a coarse quantizer on a bounded seeded sample,
 assign every vector to its nearest-centroid cell, persist (centroids,
 assignments). At crawl cadence that rebuild is the wrong shape — a daily
 1% append to a 10^9-vector corpus would re-assign the other 99% for
-nothing. This module gives the index the same change-classified refresh
-loop ContinuousAggregate gives rollup tiers:
+nothing. This module gives the index the change-classified refresh
+loop of ContinuousAggregate: the same plan (`continuous._plan`; the
+decision table is in operators/continuous.py), read in index terms:
 
   - append-only delta   -> EXTEND: assign ONLY the new vectors against the
                            frozen centroids (map-only mapInPandas, no
@@ -57,10 +58,8 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from feasts_spark.operators.continuous import (
-    _cagg_state,
-    _check_cursor_source,
-    _cursor_manifest_ok,
-    _ops_since,
+    _changed_rows,
+    _plan,
     _write_cursor_sidecar,
     append_delta,
 )
@@ -157,38 +156,25 @@ class AnnIndexView:
 
     def refresh(self, force_retrain: bool = False) -> dict:
         """Fold every source change since the last refresh into the
-        index. Returns {mode, source_from, source_to, rows_assigned,
+        index: operators/continuous.py's plan, with `merge` read as
+        EXTEND and this index's retrain rules (force_retrain, an
+        untrained index, growth or churn past `retrain_growth`) on top.
+        Returns {mode, source_from, source_to, rows_assigned,
         retrained}."""
-        _check_cursor_source(self.source, self.target, self.name)
-        head = self.source.current_version()
-        cur, _ = _cagg_state(self.target, self.name)
-        stats = {"mode": "noop", "source_from": cur, "source_to": head,
+        plan = _plan(self.source, self.target, self.name)
+        cur, head = plan.cur, plan.head
+        stats = {"mode": plan.mode, "source_from": cur, "source_to": head,
                  "rows_assigned": 0, "retrained": False}
-        if head <= cur and not force_retrain:
+        if plan.mode in ("noop", "cursor_only") and not force_retrain:
+            if plan.mode == "cursor_only":
+                _write_cursor_sidecar(self.target, self.name, head)
             return stats
 
-        ops = _ops_since(self.source, cur, head)
-        if ops is not None and all(o == "compact" for o in ops) \
-                and not force_retrain:
-            _write_cursor_sidecar(self.target, self.name, head)
-            stats["mode"] = "cursor_only"
-            return stats
-
-        cursor_summary = {"cagg_name": self.name,
-                          "cagg_source_version": head,
-                          "cagg_source_table": self.source.name}
         st = self._train_state()
         trained = st[0] if st else None
-        full = (
-            force_retrain
-            or cur == 0
-            or trained is None
-            or not _cursor_manifest_ok(self.source, cur)
-            or (ops is not None and "overwrite" in ops)
-        )
+        full = force_retrain or plan.mode == "full" or trained is None
 
-        if not full and ops is not None \
-                and all(o in ("append", "compact") for o in ops):
+        if not full and plan.mode == "merge":
             # growth since the quantizer was trained — retrain past the
             # budget instead of silently degrading recall. Manifest-only
             # arithmetic, checked BEFORE any delta job runs: a retrain
@@ -207,7 +193,7 @@ class AnnIndexView:
                     return stats
                 assigned = self._assign(delta, self._cent_np())
                 self.target.retrying(self.target.append, assigned,
-                                     extra_summary=cursor_summary)
+                                     extra_summary=plan.cursor_summary)
                 _write_cursor_sidecar(self.target, self.name, head)
                 stats.update(mode="extend", rows_assigned=n_delta)
                 return stats
@@ -241,7 +227,7 @@ class AnnIndexView:
                                replace=True)
             self.target.retrying(
                 self.target.overwrite, self._assign(src, cent),
-                extra_summary={**cursor_summary,
+                extra_summary={**plan.cursor_summary,
                                "ann_trained_rows": n_rows,
                                "ann_centroids_version": cv})
             self.centroids.tag(f"ann-{self.name}", version=cv, replace=True)
@@ -253,17 +239,10 @@ class AnnIndexView:
 
         # replace / upsert / delete (or an expired mid-range
         # manifest): key-addressed recompute of exactly the dirty ids
-        post = self.source.read_changes(cur, head)
-        pre = self.source.read_removed(cur, head)
-        for side, df_ in (("post-image", post), ("pre-image", pre)):
-            if self.id_col not in df_.columns:
-                raise ValueError(
-                    f"ann index {self.name} {side} lost column "
-                    f"{self.id_col!r} — source overwritten with another "
-                    "schema?")
         dirty = (
-            post.select(self.id_col)
-            .unionByName(pre.select(self.id_col))
+            _changed_rows(self.source, cur, head, [self.id_col],
+                          f"ann index {self.name}")
+            .select(self.id_col)
             .distinct()
             .localCheckpoint(eager=True)
         )
@@ -318,7 +297,7 @@ class AnnIndexView:
         n = assigned.count()
         if n:
             self.target.retrying(self.target.append, assigned,
-                                 extra_summary=cursor_summary)
+                                 extra_summary=plan.cursor_summary)
         _write_cursor_sidecar(self.target, self.name, head)
         stats.update(mode="recompute", rows_assigned=n)
         return stats

@@ -22,19 +22,24 @@ is no window where refreshed rows are visible but the cursor is not. A
 sidecar file covers cursor-only advances and manifest expiry; manifests
 cover a crash between commit and sidecar write.
 
-Refresh strategy by what happened in the source since the cursor:
+The refresh plan — decided in ONE place, `_plan`, for every cursor
+consumer (ContinuousAggregate.refresh and .read_fresh,
+FeatureView.refresh, AnnIndexView.refresh), by what happened in the
+source since the cursor; the first matching row wins:
 
-  - nothing               -> no-op
-  - only `compact`        -> sidecar-only cursor advance (layout changed,
-                             no logical rows did)
-  - only `append`/`compact` -> MERGE mode: the per-commit file diff gives
+  - nothing               -> `noop`
+  - only `compact`        -> `cursor_only`: sidecar-only cursor advance
+                             (layout changed, no logical rows did)
+  - `overwrite` / first run / cursor manifest expired -> `full` rebuild
+  - only `append`/`compact` -> `merge`: the per-commit file diff gives
                              exactly the new raw rows (compacted old rows
                              never enter the delta), and
                              `rollup_merge(touched_tier_rows,
                              rollup(delta))` re-aggregates WITHOUT
                              touching on-time raw data — the streaming /
                              crawl cadence hot path.
-  - `replace` or `delete` -> RECOMPUTE mode: changed ∪ removed rows mark
+  - anything else (`replace`, `delete`, an expired mid-range manifest)
+                          -> `recompute`: changed ∪ removed rows mark
                              dirty (series_key, bucket) pairs
                              (conservatively — compaction rows resurface
                              and recompute to identical values), and the
@@ -43,7 +48,14 @@ Refresh strategy by what happened in the source since the cursor:
                              Buckets whose raw rows all vanished drop from
                              the tier — retention cascades to the
                              aggregate automatically.
-  - `overwrite` / first run / cursor expired -> FULL rebuild.
+
+A merge or recompute whose dirty set comes out empty (e.g. a replace
+that rewrote zero rows) becomes `cursor_only`. A pending partial refresh
+(below) turns `cursor_only` and `merge` into `recompute`. Consumers read
+the plan in their own terms: FeatureView never merges (a feature row
+depends on its series' whole history) and reports `recompute` as
+`incremental`; AnnIndexView reads `merge` as EXTEND and layers its
+retrain rules on top; read_fresh reports `cursor_only` as `noop`.
 
 Every source read during a refresh is PINNED to the head version captured
 at entry, so a concurrent writer (e.g. the streaming sink) committing
@@ -84,6 +96,7 @@ import datetime as _dt
 import glob as _glob
 import json
 import os
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -98,19 +111,7 @@ from feasts_spark.sources.snapshots import SnapshotTable
 _KEY_COLS = ["series_key", "bucket_ts"]
 
 
-def _require_cols(df, cols, what: str) -> None:
-    """Loud failure when an invalidation input lost a load-bearing column
-    (e.g. an overwrite gave the source a shape without the cagg's key/ts):
-    the permissive union below would otherwise NULL-fill it and silently
-    skip invalidation."""
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(
-            f"{what} is missing column(s) {missing} — was the source "
-            "overwritten with another schema under this consumer?")
-
-
-# ----- shared cursor / change-classification machinery ---------------------
+# ----- shared cursor / change-planning machinery ----------------------------
 
 def _cursor_sidecar(target: SnapshotTable, name: str) -> str:
     return os.path.join(target.meta_dir, f"cagg-{name}.json")
@@ -125,8 +126,9 @@ def _write_cursor_sidecar(target: SnapshotTable, name: str,
     os.replace(tmp, p)
 
 
-def _cagg_state(target: SnapshotTable, name: str) -> tuple[int, bool]:
-    """(cursor, partial_pending) for this consumer.
+def _cursor_walk(target: SnapshotTable,
+                 name: str) -> tuple[int, bool, str | None]:
+    """(cursor, partial_pending, cursor_source) for this consumer.
 
     cursor: the newest source version already FULLY folded into `target` —
     max of the sidecar (survives manifest expiry) and the newest retained
@@ -134,7 +136,9 @@ def _cagg_state(target: SnapshotTable, name: str) -> tuple[int, bool]:
     crash between commit and sidecar write). partial_pending: an
     in-progress (non-final) refresh commit exists NEWER than that cursor
     commit — i.e. a multi-commit refresh crashed midway and part of its
-    delta is already absorbed.
+    delta is already absorbed. cursor_source: the source table that cursor
+    commit recorded (None when no retained manifest carries a cursor, or
+    it predates the record).
 
     Newest-first walk over globbed version numbers with early exit at the
     first cursor-carrying hit: O(1-2) manifest reads in steady state, not
@@ -158,43 +162,20 @@ def _cagg_state(target: SnapshotTable, name: str) -> tuple[int, bool]:
         if s.get("cagg_name") != name:
             continue
         if "cagg_source_version" in s:
-            return max(best, int(s["cagg_source_version"])), partial
+            return (max(best, int(s["cagg_source_version"])), partial,
+                    s.get("cagg_source_table"))
         partial = True  # newer uncursored refresh commit: crashed midway
-    return best, partial
+    return best, partial, None
+
+
+def _cagg_state(target: SnapshotTable, name: str) -> tuple[int, bool]:
+    """(cursor, partial_pending) for this consumer (see `_cursor_walk`)."""
+    return _cursor_walk(target, name)[:2]
 
 
 def last_refreshed_source_version(target: SnapshotTable, name: str) -> int:
     """The newest source version already folded into `target` (0 = none)."""
     return _cagg_state(target, name)[0]
-
-
-def _check_cursor_source(source: SnapshotTable, target: SnapshotTable,
-                         name: str) -> None:
-    """Loud failure when this consumer's cursor was written against a
-    DIFFERENT source table: cursor versions are only meaningful relative
-    to the table that produced them, so interpreting tier_1m versions
-    against raw (a mis-wired ContinuousAggregate) would classify changes
-    nonsensically and silently serve wrong data. Older cursors that
-    never recorded a source table pass (best-effort check)."""
-    versions = sorted(
-        (
-            int(os.path.basename(q)[1:-5])
-            for q in _glob.glob(os.path.join(target.meta_dir, "v*.json"))
-        ),
-        reverse=True,
-    )
-    for v in versions:
-        s = target.manifest(v).get("summary", {})
-        if s.get("cagg_name") != name:
-            continue
-        if "cagg_source_version" in s:
-            rec = s.get("cagg_source_table")
-            if rec is not None and rec != source.name:
-                raise ValueError(
-                    f"cagg {name}: refresh cursor was written against "
-                    f"source table {rec!r}, not {source.name!r} — "
-                    "consumer wiring mismatch")
-            return
 
 
 def _cursor_manifest_ok(source: SnapshotTable, cur: int) -> bool:
@@ -216,6 +197,94 @@ def _ops_since(source: SnapshotTable, cur: int, head: int) -> list[str] | None:
         except FileNotFoundError:
             return None
     return ops
+
+
+@dataclass
+class _Plan:
+    """One refresh's plan (the module docstring's table). `cursor_summary`
+    rides the commit that completes the refresh; a merge or recompute plan
+    carries its dirty set once the consumer derives it (`set_dirty`)."""
+    mode: str  # noop | cursor_only | full | merge | recompute
+    cur: int
+    head: int
+    cursor_summary: dict
+    dirty: DataFrame | None = None
+    delta: DataFrame | None = None  # merge: the delta's target-shaped rows
+    buckets: list = field(default_factory=list)
+
+    def set_dirty(self, dirty: DataFrame, col: str,
+                  delta: DataFrame | None = None) -> None:
+        """Record the dirty set and its sorted distinct `col` values (what
+        the commit runs split); an empty one leaves nothing to fold."""
+        self.dirty, self.delta = dirty, delta
+        self.buckets = sorted(
+            r[0] for r in dirty.select(col).distinct().collect())
+        if not self.buckets:
+            self.mode = "cursor_only"
+
+
+def _plan(source: SnapshotTable, target: SnapshotTable, name: str,
+          merges: bool = True) -> _Plan:
+    """Decide a consumer's refresh mode: take the source head, walk the
+    target's manifests ONCE (cursor, pending partial, recorded source
+    table), classify the source ops in (cursor, head]. `merges=False` is
+    for a consumer that never merges and so replays every commit safely:
+    a pending partial does not constrain it, and append-only ranges plan
+    as recompute."""
+    head = source.current_version()
+    cur, partial, recorded = _cursor_walk(target, name)
+    # cursor versions are only meaningful relative to the table that
+    # produced them: interpreting tier_1m versions against raw (a
+    # mis-wired consumer) would classify changes nonsensically and
+    # silently serve wrong data. Cursors that never recorded a source
+    # table pass (best-effort check).
+    if recorded is not None and recorded != source.name:
+        raise ValueError(
+            f"cagg {name}: refresh cursor was written against source "
+            f"table {recorded!r}, not {source.name!r} — consumer wiring "
+            "mismatch")
+    # merge-mode re-application is not idempotent, so a crashed
+    # multi-commit refresh (partial: part of the pending delta is already
+    # absorbed) must resume through recompute, which rewrites dirty
+    # state from the source and is replay-safe
+    blocked = partial and merges
+    mode = "noop"
+    if head > cur:
+        ops = _ops_since(source, cur, head)
+        if ops is not None and not blocked \
+                and all(o == "compact" for o in ops):
+            mode = "cursor_only"
+        elif cur == 0 or not _cursor_manifest_ok(source, cur) \
+                or (ops is not None and "overwrite" in ops):
+            mode = "full"
+        elif merges and not blocked and ops is not None \
+                and all(o in ("append", "compact") for o in ops):
+            mode = "merge"
+        else:
+            mode = "recompute"
+    return _Plan(mode, cur, head, {"cagg_name": name,
+                                   "cagg_source_version": head,
+                                   "cagg_source_table": source.name})
+
+
+def _changed_rows(source: SnapshotTable, cur: int, head: int, cols: list,
+                  what: str) -> DataFrame:
+    """Rows of the source files added (post-image) or dropped (pre-image)
+    in (cur, head] — a recompute's invalidation input. An overwrite with
+    another schema between cursor and head gives the pre-image the old
+    shape, hence allowMissingColumns; invalidation only needs `cols`, so
+    their absence fails loudly instead of NULL-filling and silently
+    skipping invalidation."""
+    post = source.read_changes(cur, head)
+    pre = source.read_removed(cur, head)
+    for side, df in (("post-image", post), ("pre-image", pre)):
+        missing = [c for c in cols if c not in df.columns]
+        if missing:
+            raise ValueError(
+                f"{what} {side} is missing column(s) {missing} — was the "
+                "source overwritten with another schema under this "
+                "consumer?")
+    return post.unionByName(pre, allowMissingColumns=True)
 
 
 def _split_runs(values: list, gap, max_commits: int) -> list[tuple]:
@@ -286,6 +355,7 @@ class ContinuousAggregate:
         self.source, self.target, self.tier = source, target, tier
         self.key_col, self.ts_col, self.value_col = key_col, ts_col, value_col
         self.name = name or f"cagg_{tier}"
+        self._step = _dt.timedelta(seconds=TIER_SECONDS[tier])
 
     def _with_ts(self, df: DataFrame) -> DataFrame:
         return df.filter(F.col(self.ts_col).isNotNull())
@@ -297,126 +367,97 @@ class ContinuousAggregate:
         return rollup_raw(self._with_ts(df), self.tier, self.key_col,
                           self.ts_col, self.value_col)
 
-    def _append_delta(self, cur: int, head: int) -> DataFrame:
-        return append_delta(self.source, cur, head)
+    def _dirty_plan(self) -> _Plan:
+        """The shared plan plus this aggregate's dirty set, checkpointed
+        once: merge mode aggregates the append delta (its keys are the
+        dirty set), recompute marks the (series_key, bucket) pairs that
+        changed ∪ removed rows invalidate."""
+        p = _plan(self.source, self.target, self.name)
+        if p.mode == "merge":
+            delta = self._aggregate(append_delta(
+                self.source, p.cur, p.head)).localCheckpoint(eager=True)
+            p.set_dirty(delta.select(*_KEY_COLS), "bucket_ts", delta)
+        elif p.mode == "recompute":
+            changed = _changed_rows(self.source, p.cur, p.head,
+                                    [self.key_col, self.ts_col],
+                                    f"cagg {self.name}")
+            p.set_dirty(invalidated_buckets(
+                self._with_ts(changed), self.tier, self.key_col,
+                self.ts_col).localCheckpoint(eager=True), "bucket_ts")
+        return p
 
-    def _runs(self, buckets: list, coalesce_gap_buckets: int,
-              max_commits: int) -> list[tuple]:
-        step = _dt.timedelta(seconds=TIER_SECONDS[self.tier])
-        return _split_runs(buckets, step * coalesce_gap_buckets, max_commits)
+    def _fold(self, p: _Plan, base: DataFrame | None = None,
+              run: tuple | None = None) -> DataFrame:
+        """The target rows plan `p` leaves in bucket range `run` (the
+        dirty buckets' [first, last] when None), from `base`, the target's
+        rows in that range (the whole target when None). noop and
+        cursor_only return `base` as is; full aggregates the pinned source
+        head; merge and recompute pass the clean rows of `base` through a
+        broadcast anti join and union the dirty keys, merged with the
+        delta or re-aggregated from the pinned source head."""
+        if p.mode == "full":
+            return self._aggregate(self.source.read(version=p.head))
+        base = self.target.read() if base is None else base
+        if p.mode in ("noop", "cursor_only"):
+            return base
+        lo, hi = run or (p.buckets[0], p.buckets[-1])
+        dirty = F.broadcast(p.dirty)
+        if p.mode == "merge":
+            touched = base.join(dirty, _KEY_COLS, "left_semi")
+            refreshed = rollup_merge(touched, p.delta.filter(
+                F.col("bucket_ts").between(F.lit(lo), F.lit(hi))))
+        else:
+            raw = self.source.read_where(
+                self.ts_col, lo,
+                hi + self._step - _dt.timedelta(microseconds=1),
+                version=p.head)
+            refreshed = self._aggregate(raw).join(dirty, _KEY_COLS,
+                                                  "left_semi")
+        clean = base.join(dirty, _KEY_COLS, "left_anti")
+        return clean.select(refreshed.columns).unionByName(refreshed)
 
     def refresh(self, coalesce_gap_buckets: int = 16,
                 max_commits: int = 8) -> dict:
-        """Fold every source change since the last refresh into the target.
+        """Fold every source change since the last refresh into the target,
+        as the module docstring's plan table says.
 
         Returns a stats dict: mode, source version range, dirty bucket
         count, commits made, and rows written. Safe to re-run at any time
         (a no-op when the cursor is at head) and after any crash (the
         cursor only advances on the final commit; a crashed merge refresh
-        resumes as recompute).
+        resumes as recompute). Dirty buckets coalesce into at most
+        `max_commits` runs, one `replace_where` commit each.
         """
-        _check_cursor_source(self.source, self.target, self.name)
-        head = self.source.current_version()
-        cur, partial = _cagg_state(self.target, self.name)
-        stats = {"mode": "noop", "source_from": cur, "source_to": head,
-                 "dirty_buckets": 0, "commits": 0, "rows_written": 0}
-        if head <= cur:
+        p = self._dirty_plan()
+        stats = {"mode": p.mode, "source_from": p.cur, "source_to": p.head,
+                 "dirty_buckets": len(p.buckets), "commits": 0,
+                 "rows_written": 0}
+        if p.mode == "noop":
             return stats
-
-        ops = _ops_since(self.source, cur, head)
-        if ops is not None and all(o == "compact" for o in ops) \
-                and not partial:
-            self._write_sidecar(head)
-            stats["mode"] = "cursor_only"
-            return stats
-
-        cursor_summary = {"cagg_name": self.name,
-                          "cagg_source_version": head,
-                          "cagg_source_table": self.source.name}
-
-        if cur == 0 or not _cursor_manifest_ok(self.source, cur) \
-                or (ops is not None and "overwrite" in ops):
-            full = self._aggregate(self.source.read(version=head))
-            self.target.retrying(self.target.overwrite, full,
-                                 extra_summary=cursor_summary)
-            self._write_sidecar(head)
-            n = sum(f["rows"] for f in self.target.manifest()["files"])
-            stats.update(mode="full", commits=1, rows_written=n)
-            return stats
-
-        # merge-mode re-application is not idempotent, so a crashed
-        # multi-commit refresh (partial=True: part of the pending delta is
-        # already absorbed) must resume through recompute, which rewrites
-        # dirty buckets from source state and is replay-safe
-        if ops is not None and all(o in ("append", "compact") for o in ops) \
-                and not partial:
-            mode = "merge"
-            delta_tier = self._aggregate(
-                self._append_delta(cur, head)).localCheckpoint(eager=True)
-            dirty = delta_tier.select(*_KEY_COLS)
-        else:
-            mode = "recompute"
-            # allowMissingColumns: an overwrite with another schema
-            # between cursor and head gives the pre-image the old shape —
-            # invalidation only needs key+ts, whose presence the guard
-            # enforces loudly
-            post = self.source.read_changes(cur, head)
-            pre = self.source.read_removed(cur, head)
-            for side, df_ in (("post-image", post), ("pre-image", pre)):
-                _require_cols(df_, [self.key_col, self.ts_col],
-                              f"cagg {self.name} {side}")
-            changed = post.unionByName(pre, allowMissingColumns=True)
-            dirty = invalidated_buckets(
-                self._with_ts(changed), self.tier, self.key_col, self.ts_col
-            ).localCheckpoint(eager=True)
-            delta_tier = None
-
-        buckets = sorted(
-            r[0] for r in dirty.select("bucket_ts").distinct().collect()
-        )
-        if not buckets:
-            # e.g. a replace that rewrote zero rows; nothing to fold
-            self._write_sidecar(head)
-            stats["mode"] = "cursor_only"
-            return stats
-
-        runs = self._runs(buckets, coalesce_gap_buckets, max_commits)
-        step = _dt.timedelta(seconds=TIER_SECONDS[self.tier])
-        rows_written = 0
-        for i, (lo, hi) in enumerate(runs):
-            in_range = self.target.read_where("bucket_ts", lo, hi)
-            clean = in_range.join(F.broadcast(dirty), _KEY_COLS, "left_anti")
-            if mode == "merge":
-                part = delta_tier.filter(
-                    F.col("bucket_ts").between(F.lit(lo), F.lit(hi)))
-                touched = in_range.join(F.broadcast(dirty), _KEY_COLS,
-                                        "left_semi")
-                refreshed = rollup_merge(touched, part)
-            else:
-                raw = self.source.read_where(
-                    self.ts_col, lo, hi + step - _dt.timedelta(microseconds=1),
-                    version=head)
-                refreshed = self._aggregate(raw).join(
-                    F.broadcast(dirty), _KEY_COLS, "left_semi")
-            out = clean.select(refreshed.columns).unionByName(refreshed)
-            last = i == len(runs) - 1
-            v = self.target.retrying(
-                self.target.replace_where, out, "bucket_ts", lo, hi,
-                extra_summary=cursor_summary if last
-                else {"cagg_name": self.name, **_IN_PROGRESS},
-            )
-            m = self.target.manifest(v)
-            before = {f["path"] for f in
-                      self.target.manifest(m["parent"])["files"]}
-            rows_written += sum(
-                f["rows"] for f in m["files"] if f["path"] not in before)
-        self._write_sidecar(head)
-        stats.update(mode=mode, dirty_buckets=len(buckets),
-                     commits=len(runs), rows_written=rows_written)
+        if p.mode == "full":
+            self.target.retrying(self.target.overwrite, self._fold(p),
+                                 extra_summary=p.cursor_summary)
+            stats.update(commits=1, rows_written=sum(
+                f["rows"] for f in self.target.manifest()["files"]))
+        elif p.mode != "cursor_only":
+            runs = _split_runs(p.buckets, self._step * coalesce_gap_buckets,
+                               max_commits)
+            for i, (lo, hi) in enumerate(runs):
+                out = self._fold(
+                    p, self.target.read_where("bucket_ts", lo, hi), (lo, hi))
+                v = self.target.retrying(
+                    self.target.replace_where, out, "bucket_ts", lo, hi,
+                    extra_summary=p.cursor_summary if i == len(runs) - 1
+                    else {"cagg_name": self.name, **_IN_PROGRESS},
+                )
+                m = self.target.manifest(v)
+                before = {f["path"] for f in
+                          self.target.manifest(m["parent"])["files"]}
+                stats["rows_written"] += sum(
+                    f["rows"] for f in m["files"] if f["path"] not in before)
+            stats["commits"] = len(runs)
+        _write_cursor_sidecar(self.target, self.name, p.head)
         return stats
-
-    def _write_sidecar(self, version: int) -> None:
-        _write_cursor_sidecar(self.target, self.name, version)
 
     def read_fresh(self) -> DataFrame:
         """Real-time view: the rows `refresh()` WOULD leave in the target
@@ -430,84 +471,19 @@ class ContinuousAggregate:
         view over a watermark would silently miss a backfill older than
         the watermark.
 
-        Mode lands in ``self.last_view_mode`` (mirrors refresh):
-
-        - ``noop``      cursor at head, or only compaction since — the
-                        materialized rows ARE fresh; plain target read.
-        - ``full``      no cursor / expired cursor / overwrite since —
-                        aggregates the whole pinned source head (what a
-                        first refresh would write).
-        - ``merge``     append-only tail, no pending partial refresh —
-                        the delta's tier rows merge into the touched
-                        materialized rows; clean rows pass through
-                        untouched via a broadcast anti join.
-        - ``recompute`` replace/delete since the cursor, or a crashed
-                        multi-commit refresh left a partial absorbed —
-                        dirty buckets re-aggregate from the pinned
-                        source head; the source scan footer-prunes to
-                        the [min, max] dirty bucket range (one range,
-                        not per-run: a view has no commit granularity
-                        to bound).
-
+        Same plan and same fold as `refresh()`, over the whole target and
+        the dirty buckets' [first, last] range (a view has no commit
+        granularity to bound); the plan's mode lands in
+        ``self.last_view_mode``, with `cursor_only` reported as `noop`.
         The returned plan is pinned to the source/target versions
-        captured here, so it stays consistent under concurrent writers;
-        the delta tier / dirty set is locally checkpointed once so the
-        anti/semi/merge branches don't re-derive it. Cost matches the
-        equivalent refresh minus the writes; a view over a CASCADE
-        aggregate is fresh w.r.t. its own source TABLE (the lower
-        tier) — refresh lower tiers first for end-to-end freshness.
+        captured here, so it stays consistent under concurrent writers.
+        Cost matches the equivalent refresh minus the writes; a view over
+        a CASCADE aggregate is fresh w.r.t. its own source TABLE (the
+        lower tier) — refresh lower tiers first for end-to-end freshness.
         """
-        _check_cursor_source(self.source, self.target, self.name)
-        head = self.source.current_version()
-        cur, partial = _cagg_state(self.target, self.name)
-        if head <= cur:
-            self.last_view_mode = "noop"
-            return self.target.read()
-
-        ops = _ops_since(self.source, cur, head)
-        if ops is not None and all(o == "compact" for o in ops) \
-                and not partial:
-            self.last_view_mode = "noop"
-            return self.target.read()
-
-        if cur == 0 or not _cursor_manifest_ok(self.source, cur) \
-                or (ops is not None and "overwrite" in ops):
-            self.last_view_mode = "full"
-            return self._aggregate(self.source.read(version=head))
-
-        base = self.target.read()
-        if ops is not None and all(o in ("append", "compact") for o in ops) \
-                and not partial:
-            delta_tier = self._aggregate(
-                self._append_delta(cur, head)).localCheckpoint(eager=True)
-            dirty = delta_tier.select(*_KEY_COLS)
-            touched = base.join(F.broadcast(dirty), _KEY_COLS, "left_semi")
-            refreshed = rollup_merge(touched, delta_tier)
-            self.last_view_mode = "merge"
-        else:
-            post = self.source.read_changes(cur, head)
-            pre = self.source.read_removed(cur, head)
-            for side, df_ in (("post-image", post), ("pre-image", pre)):
-                _require_cols(df_, [self.key_col, self.ts_col],
-                              f"cagg {self.name} {side}")
-            changed = post.unionByName(pre, allowMissingColumns=True)
-            dirty = invalidated_buckets(
-                self._with_ts(changed), self.tier, self.key_col, self.ts_col
-            ).localCheckpoint(eager=True)
-            bounds = dirty.agg(F.min("bucket_ts"), F.max("bucket_ts")).first()
-            if bounds[0] is None:
-                self.last_view_mode = "noop"
-                return base
-            step = _dt.timedelta(seconds=TIER_SECONDS[self.tier])
-            raw = self.source.read_where(
-                self.ts_col, bounds[0],
-                bounds[1] + step - _dt.timedelta(microseconds=1),
-                version=head)
-            refreshed = self._aggregate(raw).join(
-                F.broadcast(dirty), _KEY_COLS, "left_semi")
-            self.last_view_mode = "recompute"
-        clean = base.join(F.broadcast(dirty), _KEY_COLS, "left_anti")
-        return clean.select(refreshed.columns).unionByName(refreshed)
+        p = self._dirty_plan()
+        self.last_view_mode = "noop" if p.mode == "cursor_only" else p.mode
+        return self._fold(p)
 
 
 class CascadeAggregate(ContinuousAggregate):
@@ -608,142 +584,63 @@ class FeatureView:
     def refresh(self, coalesce_gap_buckets: int = 4,
                 max_commits: int = 8) -> dict:
         """Fold every source change since the last refresh into the
-        feature table. Same contract as ContinuousAggregate.refresh."""
-        _check_cursor_source(self.source, self.target, self.name)
-        head = self.source.current_version()
-        cur, _ = _cagg_state(self.target, self.name)
-        stats = {"mode": "noop", "source_from": cur, "source_to": head,
+        feature table: the module docstring's plan without merge, its
+        recompute reported as `incremental`. Same contract as
+        ContinuousAggregate.refresh."""
+        p = _plan(self.source, self.target, self.name, merges=False)
+        if p.mode == "recompute":
+            changed = _changed_rows(self.source, p.cur, p.head,
+                                    [self.key_col],
+                                    f"feature view {self.name}")
+            p.set_dirty(changed.select(self.key_col).distinct()
+                        .select(F.col(self.key_col), self._kb())
+                        .localCheckpoint(eager=True), "_kb")
+        stats = {"mode": p.mode, "source_from": p.cur, "source_to": p.head,
                  "dirty_keys": 0, "commits": 0}
-        if head <= cur:
+        if p.mode == "noop":
             return stats
-
-        ops = _ops_since(self.source, cur, head)
-        if ops is not None and all(o == "compact" for o in ops):
-            _write_cursor_sidecar(self.target, self.name, head)
-            stats["mode"] = "cursor_only"
-            return stats
-
-        cursor_summary = {"cagg_name": self.name,
-                          "cagg_source_version": head,
-                          "cagg_source_table": self.source.name}
-
-        if cur == 0 or not _cursor_manifest_ok(self.source, cur) \
-                or (ops is not None and "overwrite" in ops):
-            full = self._featurize(self.source.read(version=head))
+        if p.mode == "full":
+            full = self._featurize(self.source.read(version=p.head))
             self.target.retrying(self.target.overwrite, full,
-                                 extra_summary=cursor_summary)
-            _write_cursor_sidecar(self.target, self.name, head)
-            stats.update(mode="full", commits=1)
-            return stats
+                                 extra_summary=p.cursor_summary)
+            stats["commits"] = 1
+        elif p.mode == "recompute":
+            dirty_keys = F.broadcast(p.dirty.select(self.key_col))
+            # ONE pass over the pinned source head for every dirty
+            # series' full history; materialized so per-run commits don't
+            # rescan the raw table. When the source carries key blooms,
+            # the pass opens only the files that may hold a dirty key
+            # (superset read — the broadcast semi join below stays the
+            # exact predicate); min/max stats can't prune here because a
+            # ts-clustered file spans the whole key space.
+            src = None
+            if self.key_col in getattr(self.source, "bloom_cols", ()):
+                # shared probe helper: caps the key set (beyond the cap
+                # the full-scan semi join is the right plan anyway) and
+                # strips NULLs before hashing
+                probe = self.source._collect_probe_keys(p.dirty,
+                                                        self.key_col)
+                if probe is not None:
+                    src = self.source.read_containing(
+                        self.key_col, probe, version=p.head)
+            if src is None:
+                src = self.source.read(version=p.head)
+            raw_dirty = src.join(dirty_keys, self.key_col, "left_semi")
+            recomputed = self._featurize(raw_dirty).localCheckpoint(
+                eager=True)
 
-        post = self.source.read_changes(cur, head)
-        pre = self.source.read_removed(cur, head)
-        for side, df_ in (("post-image", post), ("pre-image", pre)):
-            _require_cols(df_, [self.key_col],
-                          f"feature view {self.name} {side}")
-        changed = post.unionByName(pre, allowMissingColumns=True)
-        dirty_keys = changed.select(self.key_col).distinct() \
-            .select(F.col(self.key_col), self._kb()) \
-            .localCheckpoint(eager=True)
-        buckets = sorted(
-            r[0] for r in dirty_keys.select("_kb").distinct().collect())
-        if not buckets:
-            _write_cursor_sidecar(self.target, self.name, head)
-            stats["mode"] = "cursor_only"
-            return stats
-
-        # ONE pass over the pinned source head for every dirty series'
-        # full history; materialized so per-run commits don't rescan the
-        # raw table. When the source carries key blooms, the pass opens
-        # only the files that may hold a dirty key (superset read — the
-        # broadcast semi join below stays the exact predicate); min/max
-        # stats can't prune here because a ts-clustered file spans the
-        # whole key space.
-        src = None
-        if self.key_col in getattr(self.source, "bloom_cols", ()):
-            # shared probe helper: caps the key set (beyond the cap the
-            # full-scan semi join is the right plan anyway) and strips
-            # NULLs before hashing
-            probe = self.source._collect_probe_keys(
-                dirty_keys, self.key_col)
-            if probe is not None:
-                src = self.source.read_containing(
-                    self.key_col, probe, version=head)
-        if src is None:
-            src = self.source.read(version=head)
-        raw_dirty = src.join(
-            F.broadcast(dirty_keys.select(self.key_col)),
-            self.key_col, "left_semi")
-        recomputed = self._featurize(raw_dirty).localCheckpoint(eager=True)
-
-        runs = _split_runs(buckets, coalesce_gap_buckets, max_commits)
-        for i, (lo, hi) in enumerate(runs):
-            part = recomputed.filter(F.col("_kb").between(lo, hi))
-            clean = self.target.read_where("_kb", lo, hi).join(
-                F.broadcast(dirty_keys.select(self.key_col)),
-                self.key_col, "left_anti")
-            out = clean.select(part.columns).unionByName(part)
-            self.target.retrying(
-                self.target.replace_where, out, "_kb", lo, hi,
-                extra_summary=cursor_summary if i == len(runs) - 1
-                else {"cagg_name": self.name, **_IN_PROGRESS},
-            )
-        _write_cursor_sidecar(self.target, self.name, head)
-        stats.update(mode="incremental", dirty_keys=dirty_keys.count(),
-                     commits=len(runs))
+            runs = _split_runs(p.buckets, coalesce_gap_buckets, max_commits)
+            for i, (lo, hi) in enumerate(runs):
+                part = recomputed.filter(F.col("_kb").between(lo, hi))
+                clean = self.target.read_where("_kb", lo, hi).join(
+                    dirty_keys, self.key_col, "left_anti")
+                out = clean.select(part.columns).unionByName(part)
+                self.target.retrying(
+                    self.target.replace_where, out, "_kb", lo, hi,
+                    extra_summary=p.cursor_summary if i == len(runs) - 1
+                    else {"cagg_name": self.name, **_IN_PROGRESS},
+                )
+            stats.update(mode="incremental", dirty_keys=p.dirty.count(),
+                         commits=len(runs))
+        _write_cursor_sidecar(self.target, self.name, p.head)
         return stats
-
-    def read_fresh(self) -> DataFrame:
-        """Real-time feature view: the rows `refresh()` WOULD leave in
-        the feature table at the current source head, computed read-only
-        (see ContinuousAggregate.read_fresh). Because a feature row
-        depends on its series' FULL history, the fresh tail here is the
-        dirty-key recompute itself — clean series' materialized rows
-        pass through a broadcast anti join; dirty series re-featurize
-        from the pinned source head (bloom-pruned when the source
-        carries key blooms). Mode lands in ``self.last_view_mode``:
-        noop / full / incremental."""
-        _check_cursor_source(self.source, self.target, self.name)
-        head = self.source.current_version()
-        cur, _ = _cagg_state(self.target, self.name)
-        if head <= cur:
-            self.last_view_mode = "noop"
-            return self.target.read()
-
-        ops = _ops_since(self.source, cur, head)
-        if ops is not None and all(o == "compact" for o in ops):
-            self.last_view_mode = "noop"
-            return self.target.read()
-
-        if cur == 0 or not _cursor_manifest_ok(self.source, cur) \
-                or (ops is not None and "overwrite" in ops):
-            self.last_view_mode = "full"
-            return self._featurize(self.source.read(version=head))
-
-        post = self.source.read_changes(cur, head)
-        pre = self.source.read_removed(cur, head)
-        for side, df_ in (("post-image", post), ("pre-image", pre)):
-            _require_cols(df_, [self.key_col],
-                          f"feature view {self.name} {side}")
-        changed = post.unionByName(pre, allowMissingColumns=True)
-        dirty_keys = changed.select(self.key_col).distinct() \
-            .localCheckpoint(eager=True)
-        base = self.target.read()
-        if dirty_keys.isEmpty():
-            self.last_view_mode = "noop"
-            return base
-
-        src = None
-        if self.key_col in getattr(self.source, "bloom_cols", ()):
-            probe = self.source._collect_probe_keys(dirty_keys, self.key_col)
-            if probe is not None:
-                src = self.source.read_containing(
-                    self.key_col, probe, version=head)
-        if src is None:
-            src = self.source.read(version=head)
-        raw_dirty = src.join(F.broadcast(dirty_keys), self.key_col,
-                             "left_semi")
-        recomputed = self._featurize(raw_dirty)
-        clean = base.join(F.broadcast(dirty_keys), self.key_col, "left_anti")
-        self.last_view_mode = "incremental"
-        return clean.select(recomputed.columns).unionByName(recomputed)

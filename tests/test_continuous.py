@@ -265,6 +265,27 @@ class TestRefreshAccounting:
         assert st["rows_written"] == added > 0
         _assert_synced(src, tgt, cagg)
 
+    def test_noop_refresh_reads_target_manifest_once(self, spark, pair):
+        """Planning walks the target's manifests once: a refresh with
+        nothing to fold reads only the newest, cursor-carrying one."""
+        src, tgt = pair
+        src.append(_turns(spark, 60))
+        cagg = ContinuousAggregate(src, tgt, "1h")
+        cagg.refresh()
+        calls = []
+        read_manifest = tgt.manifest
+
+        def spy(version=None):
+            calls.append(version)
+            return read_manifest(version)
+
+        tgt.manifest = spy
+        try:
+            assert cagg.refresh()["mode"] == "noop"
+        finally:
+            del tgt.manifest
+        assert calls == [tgt.current_version()]
+
 
 class TestCascadeChain:
     """raw -> 1m (cagg) -> 1h (cascade) -> 1d (cascade): every level must

@@ -12,10 +12,8 @@ from pyspark.sql import Row, functions as F, types as T
 from feasts_spark.operators.continuous import (
     CascadeAggregate,
     ContinuousAggregate,
-    FeatureView,
     _cagg_state,
 )
-from feasts_spark.operators.features import features
 from feasts_spark.operators.rollup import rollup_raw
 from feasts_spark.sources.snapshots import SnapshotTable
 
@@ -198,6 +196,43 @@ class TestCaggReadFresh:
         _assert_fresh(src, c1h, view)
         assert view.count() > h1.read().count()
 
+    def test_view_equals_next_refresh_across_change_classes(
+            self, spark, pair):
+        """After each source change, read_fresh() returns exactly the rows
+        the following refresh() commits, planned the same way."""
+        src, tgt = pair
+        cagg = ContinuousAggregate(src, tgt, "1h")
+        hour = dt.timedelta(hours=1)
+
+        def correct():
+            fixed = src.read().filter(
+                (F.col("ts") >= F.lit(T0 + hour))
+                & (F.col("ts") < F.lit(T0 + 2 * hour))
+            ).withColumn("value", F.col("value") + 100.0)
+            src.replace_where(fixed, "ts", T0 + hour,
+                              T0 + 2 * hour - dt.timedelta(microseconds=1))
+
+        steps = [
+            ("full", lambda: src.append(_turns(spark, 120, conv_mod=3))),
+            ("merge", lambda: src.append(
+                _turns(spark, 60, start_minute=120, conv_mod=3))),
+            ("merge", lambda: src.append(  # late rows into hour 0
+                _turns(spark, 3, start_minute=30, conv_mod=3, bump=7.0))),
+            ("recompute", correct),
+            ("recompute", lambda: src.delete_below("ts", T0 + hour)),
+            ("cursor_only", lambda: src.compact(small_bytes=1 << 30)),
+            ("full", lambda: src.overwrite(
+                _turns(spark, 90, day=1, conv_mod=3))),
+        ]
+        for want, change in steps:
+            change()
+            view = sorted(_r(cagg.read_fresh()).collect())
+            view_mode = cagg.last_view_mode
+            mode = cagg.refresh()["mode"]
+            assert mode == want
+            assert view_mode == ("noop" if mode == "cursor_only" else mode)
+            assert view == sorted(_r(tgt.read()).collect()), want
+
 
 class TestCursorSourceIdentity:
     def test_miswired_consumer_raises(self, spark, tmp_path):
@@ -220,66 +255,3 @@ class TestCursorSourceIdentity:
             bad.read_fresh()
         # the correctly-wired consumer still works
         assert ContinuousAggregate(src, tgt, "1h").refresh()["mode"] == "noop"
-
-
-SELECT = ("n_crossing_points", "longest_flat_spot", "feat_acf")
-
-_FSCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("ts", T.TimestampType()),
-    T.StructField("value", T.DoubleType()),
-])
-
-
-def _fturns(spark, convs, n_each=40, start=0, bump=0.0):
-    rows = [
-        Row(conv_id=c, ts=T0 + dt.timedelta(minutes=start + i),
-            value=float((i * 31 + j * 7) % 23) + bump)
-        for j, c in enumerate(convs)
-        for i in range(n_each)
-    ]
-    return spark.createDataFrame(rows, _FSCHEMA)
-
-
-class TestFeatureViewReadFresh:
-    def _expect(self, src, view):
-        return features(
-            src.read(), key_col="conv_id", order_col="ts",
-            value_col="value", select=SELECT, min_points=view.min_points,
-        )
-
-    def test_incremental_view(self, spark, tmp_path):
-        src = SnapshotTable(spark, str(tmp_path), "raw", stats_cols=("ts",))
-        tgt = SnapshotTable(spark, str(tmp_path), "feats",
-                            stats_cols=("_kb",))
-        fv = FeatureView(src, tgt, n_buckets=8, select=SELECT)
-        src.append(_fturns(spark, ["a", "b", "c", "d"]))
-        fv.refresh()
-        # dirty one existing series and add a brand-new one
-        src.append(_fturns(spark, ["b", "e"], start=40, bump=3.0))
-        before = _frozen(tgt, fv.name)
-        view = fv.read_fresh()
-        assert fv.last_view_mode == "incremental"
-        got = view.drop("_kb")
-        expect = self._expect(src, fv)
-        assert got.count() == expect.count()
-        assert got.exceptAll(expect).count() == 0
-        assert expect.exceptAll(got).count() == 0
-        assert _frozen(tgt, fv.name) == before
-        # stale table is missing the new series
-        assert tgt.read().count() == view.count() - 1
-
-    def test_full_then_noop(self, spark, tmp_path):
-        src = SnapshotTable(spark, str(tmp_path), "raw", stats_cols=("ts",))
-        tgt = SnapshotTable(spark, str(tmp_path), "feats",
-                            stats_cols=("_kb",))
-        fv = FeatureView(src, tgt, n_buckets=8, select=SELECT)
-        src.append(_fturns(spark, ["a", "b"]))
-        view = fv.read_fresh()
-        assert fv.last_view_mode == "full"
-        assert view.drop("_kb").exceptAll(self._expect(src, fv)).count() == 0
-        assert tgt.current_version() == 0
-        fv.refresh()
-        view2 = fv.read_fresh()
-        assert fv.last_view_mode == "noop"
-        assert view2.exceptAll(tgt.read()).count() == 0

@@ -15,7 +15,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 STRICT = "--strict" in sys.argv
 argv = [a for a in sys.argv if a != "--strict"]

@@ -8,9 +8,11 @@ the formatted plan, so plan regressions are reviewable in git diffs.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -471,7 +473,7 @@ def main() -> None:
             "```",
             "",
         ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     shutil.rmtree(snap_root, ignore_errors=True)
     shutil.rmtree(stitch_root, ignore_errors=True)

@@ -16,11 +16,13 @@ feasts_spark/kernels/cointegration.py; takes a few minutes)
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 T = 1000
 REPS = 20000

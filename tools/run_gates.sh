@@ -11,7 +11,7 @@ export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 python -m pytest tests/ -x -q
 python -m pytest perfbench/test_helpers.py -q
-python tools/check_oracles.py
+python tools/check_oracles.py --strict
 if [[ "${1:-}" == "--bench" ]]; then
   python bench.py
 fi
